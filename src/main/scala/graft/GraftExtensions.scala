@@ -11,8 +11,8 @@ import graft.functions.{DotProduct, WordShingles}
   *
   * {{{
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
-  *   // or
-  *   SparkSession.builder().withExtensions(new GraftExtensions) ...
+  *   // or, on a session builder
+  *   builder.withExtensions(new GraftExtensions) ...
   *   spark.sql("SELECT dot_product(a.embedding, b.embedding) FROM ...")
   *   spark.sql("SELECT word_shingles(tokens, 3) FROM ...")
   * }}}

@@ -50,26 +50,11 @@ class SyncEngine(spark: SparkSession, config: SyncConfig,
     val out = Seq.newBuilder[MappingReport]
     val it = config.mappings.iterator
     var interrupted = false
-    while (!interrupted && it.hasNext) {
-      val m = it.next()
-      try out += syncMapping(m)
-      catch {
-        case e: Exception if isInterruption(e) =>
-          System.err.println(s"[sync] mapping ${m.mappingId} cycle " +
-            "interrupted (stop in progress) - expected; interrupted objects " +
-            "re-sync next run via their ledger status")
-          Thread.currentThread().interrupt()
-          interrupted = true
-        case e: Exception =>
-          // log class + full stack, not just getMessage: an NPE's message is
-          // null and a bare "failed: null" line is undiagnosable (the
-          // reference logs the full error too, sync.go:43-47)
-          System.err.println(
-            s"[sync] mapping ${m.mappingId} failed: ${e.getClass.getName}: " +
-              s"${e.getMessage}")
-          e.printStackTrace()
+    while (!interrupted && it.hasNext)
+      out ++= runMapping(it.next(), concurrent = false) {
+        Thread.currentThread().interrupt()
+        interrupted = true
       }
-    }
     out.result()
   }
 
@@ -110,55 +95,56 @@ class SyncEngine(spark: SparkSession, config: SyncConfig,
         pool.submit(new java.util.concurrent.Callable[Option[MappingReport]] {
           def call(): Option[MappingReport] =
             if (aborted.get()) None
-            else try Some(syncMapping(m, concurrent = true))
-            catch {
-              case e: Exception if isInterruption(e) =>
-                System.err.println(s"[sync] mapping ${m.mappingId} cycle " +
-                  "interrupted (stop in progress) - expected; interrupted " +
-                  "objects re-sync next run via their ledger status")
-                aborted.set(true)
-                None
-              case e: Exception =>
-                System.err.println(
-                  s"[sync] mapping ${m.mappingId} failed: " +
-                    s"${e.getClass.getName}: ${e.getMessage}")
-                e.printStackTrace()
-                None
-            }
+            else runMapping(m, concurrent = true)(aborted.set(true))
         })
       }
       tasks.flatMap(t => t.get())
     } finally pool.shutdown()
   }
 
-  /** True when the exception is (or wraps) a thread interrupt / job
-    * cancellation — Spark surfaces a stop() interrupt variously as a raw
-    * InterruptedException (AQE's result queue, DAGScheduler awaits) or a
-    * SparkException whose message or cause chain records the cancellation.
+  /** One mapping's cycle under SyncAll's per-mapping isolation, shared by
+    * both [[syncAll]] overloads: a failure logs and yields None; an
+    * interrupt (stop in progress) logs as expected, runs `onInterrupt`
+    * and yields None.
     */
-  private def isInterruption(e: Throwable): Boolean = {
-    var t = e
-    var depth = 0
-    while (t != null && depth < 10) {
-      t match {
-        case _: InterruptedException => return true
-        case s: org.apache.spark.SparkException
-          if s.getMessage != null &&
-            (s.getMessage.contains("CANCELLED") ||
-             s.getMessage.contains("cancelled")) => return true
-        case _ =>
-      }
-      t = t.getCause
-      depth += 1
+  private def runMapping(m: MappingConf, concurrent: Boolean)(
+      onInterrupt: => Unit): Option[MappingReport] =
+    try Some(syncMapping(m, concurrent))
+    catch {
+      case e: Exception if isInterruption(e) =>
+        System.err.println(s"[sync] mapping ${m.mappingId} cycle " +
+          "interrupted (stop in progress) - expected; interrupted objects " +
+          "re-sync next run via their ledger status")
+        onInterrupt
+        None
+      case e: Exception =>
+        // log class + full stack, not just getMessage: an NPE's message is
+        // null and a bare "failed: null" line is undiagnosable (the
+        // reference logs the full error too, sync.go:43-47)
+        System.err.println(
+          s"[sync] mapping ${m.mappingId} failed: ${e.getClass.getName}: " +
+            s"${e.getMessage}")
+        e.printStackTrace()
+        None
     }
-    false
-  }
 
   /** SyncBuckets (sync.go:56-176) as a relational plan + two executors. */
   def syncMapping(m: MappingConf): MappingReport =
     syncMapping(m, concurrent = false)
 
+  /** The cycle's cached frames (source catalog, decided diff) live only
+    * for this cycle — the next one re-scans — so they are unpersisted,
+    * newest first, once the ledger commit and orphan delete are done.
+    */
   private def syncMapping(m: MappingConf, concurrent: Boolean): MappingReport = {
+    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def pin(df: DataFrame): DataFrame = { cached += df; df.cache() }
+    try syncMapping(m, concurrent, pin)
+    finally cached.reverseIterator.foreach(_.unpersist())
+  }
+
+  private def syncMapping(m: MappingConf, concurrent: Boolean,
+                          pin: DataFrame => DataFrame): MappingReport = {
     val srcUri = config.sourceUri(m)
     val dstUri = config.targetUri(m)
     val mid = m.mappingId
@@ -169,7 +155,7 @@ class SyncEngine(spark: SparkSession, config: SyncConfig,
       mid.replaceAll("[^A-Za-z0-9._-]", "_")
 
     // 1-4: scans + DDL (bucket_exists_guard gives empty catalog, not error)
-    val srcCatalog = ObjectStoreCatalog.scanCatalog(spark, srcUri).cache()
+    val srcCatalog = pin(ObjectStoreCatalog.scanCatalog(spark, srcUri))
     val tgtCatalog = ObjectStoreCatalog.scanCatalog(spark, dstUri)
     ObjectStoreCatalog.ensureBucket(spark, dstUri)
 
@@ -182,7 +168,7 @@ class SyncEngine(spark: SparkSession, config: SyncConfig,
     // commits never touch this mapping's rows.
     val ledgerRead = readLedger(spark, config.ledgerPath)
     val ledger = if (concurrent) ledgerRead.localCheckpoint(true) else ledgerRead
-    val decided = SyncOps.catalogLedgerDiff(srcCatalog, ledger, mid).cache()
+    val decided = pin(SyncOps.catalogLedgerDiff(srcCatalog, ledger, mid))
     val toCopy = SyncOps.needsSync(decided)
 
     // 6c-6d: distributed stream copy. Receipts MUST be materialized before
@@ -325,22 +311,32 @@ class SyncEngine(spark: SparkSession, config: SyncConfig,
       orphansRemoved = removed,
       tagFailed = tagFailed)
   }
-
-  /** Continuous mode (main.go:87-106): initial sync, then fixed-interval
-    * re-execution — each cycle stateless except the ledger, exactly the
-    * reference's ticker semantics.
-    */
-  def runContinuously(intervalMs: Long, cycles: Int = Int.MaxValue): Unit = {
-    var i = 0
-    while (i < cycles) {
-      syncAll()
-      i += 1
-      if (i < cycles) Thread.sleep(intervalMs)
-    }
-  }
 }
 
 object SyncEngine {
+
+  /** True when the exception is (or wraps) a thread interrupt / job
+    * cancellation — Spark surfaces a stop() interrupt variously as a raw
+    * InterruptedException (AQE's result queue, DAGScheduler awaits) or a
+    * SparkException whose message or cause chain records the cancellation.
+    */
+  private[graft] def isInterruption(e: Throwable): Boolean = {
+    var t = e
+    var depth = 0
+    while (t != null && depth < 10) {
+      t match {
+        case _: InterruptedException => return true
+        case s: org.apache.spark.SparkException
+          if s.getMessage != null &&
+            (s.getMessage.contains("CANCELLED") ||
+             s.getMessage.contains("cancelled")) => return true
+        case _ =>
+      }
+      t = t.getCause
+      depth += 1
+    }
+    false
+  }
 
   /** The [[graft.sources.PostCopyTagger]] input frame: success receipts
     * joined back to the catalog's header columns — one row per object

@@ -207,7 +207,7 @@ object Barriers {
     * compounds the estimate to `s^k` per round. The VALUE is never used
     * beyond broadcast decisions, but its BigInt DIGIT COUNT grows
     * geometrically (measured ×3/round for the 3-reference
-    * connected-components round, `tools.StatsProbe`), until the driver
+    * connected-components round, r11 stats probe), until the driver
     * spends minutes in `BigInteger.multiplyToomCook3` just planning —
     * the r11 sf1 rehearsal hung exactly here. Rebuilding the `LogicalRDD`
     * with `Statistics(rows × bytesPerRow)` — both known by the caller —

@@ -27,60 +27,15 @@ object CorpusOps {
 
   // ---- near-dup cluster resolution ------------------------------------
 
-  /** Connected components by min-label propagation WITH pointer jumping:
-    * every node starts labeled with itself; each round takes the min over
-    * (own label, neighbors' labels, label-of-own-label); fixpoint = each
-    * component labeled by its minimum id.
+  /** Connected components: every node ends labeled with the minimum id
+    * of its component. `edges` are undirected candidate pairs (doc_a,
+    * doc_b); `nodes` is the full id set so singletons come out labeled
+    * with themselves.
     *
-    * The jump term is what makes the loop scale-safe. Neighbor-only
-    * propagation moves the min one hop per round — O(diameter) rounds —
-    * which the r11 sf1 rehearsal broke in practice: a 10× corpus at a low
-    * cosine threshold percolates into a giant component (chance-similarity
-    * edge count grows ~quadratically with n on the near-uniform synthetic
-    * sphere), whose diameter blew past 20 hops. With the jump
-    * (`label(label(v))`, one extra labels⋈labels equi-join per round) the
-    * distance each node's label has traveled DOUBLES per round — the
-    * path-graph recurrence is f(t+1) = 2·f(t) — so rounds = O(log
-    * diameter) and the same maxIter=20 now covers components a million
-    * hops wide. The jump stays inside the component: labels are always
-    * ids of connected nodes, so label-of-label is too. Tiny-clique graphs
-    * (the real near-dup case, diameter 2-3) still exit in 2-3 rounds and
-    * pay one cheap extra n-row join.
-    *
-    * Scale shape: per round, three keyed shuffles (edge⋈label join +
-    * groupBy min + label self-join) — never a collect of the graph; an
-    * eager [[Barriers.materialize]] truncates the lineage so plans stay
-    * flat across rounds (strategy `checkpoint` gives durable cluster-grade
-    * truncation). Convergence is detected by the label sum — it strictly
-    * decreases until fixpoint, so one scalar aggregate per round decides
-    * termination (no frame comparison).
-    *
-    * `edges` are undirected candidate pairs (doc_a, doc_b); `nodes` is the
-    * full id set so singletons come out labeled with themselves.
-    */
-  def connectedComponents(
-      nodes: DataFrame, edges: DataFrame, maxIter: Int = 20): DataFrame = {
-    // Implementation knob (r20 optimization): `contract` (default) is the
-    // edge-contraction loop below — O(log n) rounds on EVERY graph shape,
-    // measured ~half the rounds of the jump loop on the declared
-    // winnowed/cosine graphs. `jump` keeps the r19 label-propagation loop
-    // for A/B re-measurement; both compute the identical fixpoint (min
-    // node id per component) and the oracle verifies them interchangeably.
-    val impl = nodes.sparkSession.conf.getOption("graft.cc.impl")
-      .orElse(sys.env.get("SPARK_GRAFT_CC_IMPL")).getOrElse("contract")
-    impl match {
-      case "contract" => connectedComponentsContract(nodes, edges, maxIter)
-      case "jump"     => connectedComponentsJump(nodes, edges, maxIter)
-      case other => throw new IllegalArgumentException(
-        s"graft.cc.impl must be contract|jump, got: $other")
-    }
-  }
-
-  /** Edge-contraction connected components (r20 — the Kiveris et al.
-    * "label-graph propagation" accelerator the r19 round left on the
-    * table): after the specialized round 1, the loop runs on the
-    * CONTRACTED label graph, not the doc-level edge list. Each round
-    * builds the supernode map
+    * Edge contraction (r20 — the Kiveris et al. "label-graph
+    * propagation" accelerator): after the specialized round 1, the loop
+    * runs on the CONTRACTED label graph, not the doc-level edge list.
+    * Each round builds the supernode map
     *
     *   m(s) = min(s, min over E-neighbors of s, label(s))
     *
@@ -122,7 +77,7 @@ object CorpusOps {
     * label if it is the smallest id (the jump lookup is a left join, so
     * no row is ever dropped — the r19 ADVICE latent-drop case).
     */
-  private[graft] def connectedComponentsContract(
+  def connectedComponents(
       nodes: DataFrame, edges: DataFrame, maxIter: Int = 20): DataFrame = {
     // Honest size estimates on every materialized frame: the checkpoint
     // otherwise carries the producing plan's estimate, which repeated
@@ -234,99 +189,6 @@ object CorpusOps {
       throw new IllegalStateException(
         s"connectedComponents: contracted graph not empty after $maxIter " +
         "rounds — contraction + jump cover ~2^maxIter-hop components; " +
-        "raise maxIter, and check the edge set for a percolated giant " +
-        "component (threshold too low for the corpus)")
-    labels
-  }
-
-  /** The r19 label-propagation loop (min over self / neighbor labels /
-    * label-of-own-label, pointer jumping) — kept verbatim behind
-    * `graft.cc.impl = jump` for A/B re-measurement against the
-    * contraction loop above; same fixpoint, same oracle.
-    */
-  private[graft] def connectedComponentsJump(
-      nodes: DataFrame, edges: DataFrame, maxIter: Int = 20): DataFrame = {
-    val symRaw = Barriers.materialize(edges
-      .select(explode(array(
-        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst")))
-    val sym = Barriers.withSizeEstimate(symRaw,
-      LoopProbe.timed("cc", 0, "edges") { symRaw.count() }, 32)
-    val l1Raw = Barriers.materialize(nodes
-      .select(col("doc_id"))
-      .join(sym.groupBy(col("src").as("doc_id"))
-               .agg(min(col("dst")).as("nbr_min")),
-            Seq("doc_id"), "left_outer")
-      .select(col("doc_id"),
-        least(col("doc_id"), coalesce(col("nbr_min"), col("doc_id")))
-          .as("cluster_id")))
-    val r1 = LoopProbe.timed("cc", 1, "round") {
-      l1Raw.agg(count(lit(1)),
-                coalesce(sum(col("doc_id")), lit(0L)),
-                coalesce(sum(col("cluster_id")), lit(0L))).head() }
-    val nNodes = r1.getLong(0)
-    val idSum = r1.getLong(1)
-    var curSum = r1.getLong(2)
-    var labels = Barriers.withSizeEstimate(l1Raw, nNodes, 32)
-    // sum unchanged from the identity ⇒ least() kept every doc_id (each
-    // term is ≤ its identity value, so sum equality is pointwise
-    // equality) ⇒ no edge connects distinct ids — already the fixpoint
-    var converged = curSum == idSum
-    var iter = if (converged) 0 else 1
-    // `iter` counts label-DECREASING rounds; the round that confirms the
-    // fixpoint (sum unchanged) doesn't increment it. `<=` admits that
-    // confirming round when the diameter is exactly maxIter — the labels
-    // are already correct then, and `<` would throw on a right answer.
-    while (iter <= maxIter && !converged) {
-      val nbrMin = sym
-        .join(labels.select(col("doc_id").as("dst"),
-                            col("cluster_id").as("dst_lab")), Seq("dst"))
-        .groupBy(col("src").as("doc_id"))
-        .agg(min(col("dst_lab")).as("nbr_min"))
-      // pointer jump: label(label(v)) — every label IS a node id, so the
-      // lookup is an inner equi-join of the label table against itself.
-      // (A second jump per round was measured in this round's r19 probe:
-      // rounds went only 9→8 on the winnowed graph and 8→8 on the cosine
-      // graph — with ids placed randomly along a chain the jump chain
-      // doesn't compress, nbrMin does the propagation — so the extra
-      // n-row join per round doesn't pay. The accelerator that DOES
-      // help adversarial long-chain graphs is edge contraction
-      // (label-graph propagation, Kiveris et al.); left unimplemented —
-      // these graphs converge in ≤ 9 rounds without it.)
-      val jump = labels
-        .join(labels.select(col("doc_id").as("cluster_id"),
-                            col("cluster_id").as("jump_lab")),
-              Seq("cluster_id"))
-        .select(col("doc_id"), col("jump_lab"))
-      val nextRaw = Barriers.materialize(labels
-        .join(nbrMin, Seq("doc_id"), "left_outer")
-        .join(jump, Seq("doc_id"))
-        .select(col("doc_id"),
-          least(col("cluster_id"),
-                coalesce(col("nbr_min"), col("cluster_id")),
-                col("jump_lab")).as("cluster_id")))
-      // one action: computes the round, caches the barrier blocks, and
-      // returns the convergence sum
-      val s = LoopProbe.timed("cc", iter + 1, "round") {
-        nextRaw.agg(coalesce(sum(col("cluster_id")), lit(0L)))
-          .head().getLong(0) }
-      val next = Barriers.withSizeEstimate(nextRaw, nNodes, 32)
-      // the old round's blocks are dead once `next` is materialized —
-      // without this, persist/localCheckpoint pins one label copy per round
-      Barriers.release(labels)
-      labels = next
-      if (s == curSum) converged = true
-      else { curSum = s; iter += 1 }
-    }
-    Barriers.release(sym)
-    // Fail loudly: a non-fixpoint result carries split cluster ids, and a
-    // downstream dedup would silently keep duplicates. Long-chain graphs
-    // (diameter > maxIter) must raise maxIter, not accept a wrong answer.
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents: no fixpoint after $maxIter rounds — " +
-        "with pointer jumping that means a component ~2^maxIter hops wide; " +
         "raise maxIter, and check the edge set for a percolated giant " +
         "component (threshold too low for the corpus)")
     labels

@@ -22,7 +22,6 @@ object LoopProbe {
   private val buf = new scala.collection.mutable.ArrayBuffer[Sample]
 
   def enable(): Unit = { enabled = true }
-  def disable(): Unit = { enabled = false }
 
   /** Time `f` under (op, round, phase) when enabled; transparent when not. */
   def timed[T](op: String, round: Int, phase: String)(f: => T): T =

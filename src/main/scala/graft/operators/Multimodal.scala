@@ -294,9 +294,9 @@ object Multimodal {
       threshold, dim, bands, rowsPerBand, maxBucket)
 
   /** The foreign screen's GEOMETRY over arbitrary caption/frame vector
-    * frames — split out of [[captionFrameHits]] so the entropy rehearsal
-    * (graft.tools.CaptionEntropyProbe) drives the exact declared plan
-    * with synthetic high-entropy vectors instead of a re-implementation.
+    * frames — split out of [[captionFrameHits]] so every caller that
+    * brings its own caption/frame frames screens with the exact declared
+    * plan instead of a re-implementation.
     * `caps` = (media_id, cv); `feats` = (vec_id, embedding).
     */
   private[graft] def captionFrameHitsFrom(

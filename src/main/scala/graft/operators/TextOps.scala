@@ -601,50 +601,10 @@ object TextOps {
     * must filter, mirroring how such docs drop out of the batch explode.
     */
   def withMinhashBandKeys(docs: DataFrame, k: Int = 8,
-                          bands: Int = 4): DataFrame = {
-    // `hof` keeps the r19 interpreted formulation selectable for A/B
-    // re-measurement (the graft.cc.impl precedent); both produce
-    // bit-identical band arrays (MinhashBandKeysSpec pins it).
-    val impl = docs.sparkSession.conf.getOption("graft.bandkeys.impl")
-      .orElse(sys.env.get("SPARK_GRAFT_BANDKEYS_IMPL")).getOrElse("native")
-    impl match {
-      case "native" =>
-        docs.withColumn("bands",
-          graft.functions.MinhashBandKeys.minhash_band_keys(
-            shingles(tokens(col("text")), 3), k, bands))
-      case "hof" => withMinhashBandKeysHof(docs, k, bands)
-      case other => throw new IllegalArgumentException(
-        s"graft.bandkeys.impl must be native|hof, got: $other")
-    }
-  }
-
-  /** The r19 per-row HOF formulation (staged md5 arrays +
-    * `array_min(transform(...))` per signature — interpreted eval), kept
-    * verbatim behind `graft.bandkeys.impl = hof` for A/B re-measurement
-    * against the native expression above.
-    */
-  private[operators] def withMinhashBandKeysHof(docs: DataFrame, k: Int,
-                                                bands: Int): DataFrame = {
-    val r = k / bands
-    val nMd5 = (k + MinhashSlicesPerMd5 - 1) / MinhashSlicesPerMd5
-    val withH = (0 until nMd5).foldLeft(
-      docs.withColumn("_sh", shingles(tokens(col("text")), 3))) { (df, h) =>
-      df.withColumn(s"_h$h", transform(col("_sh"), s =>
-        md5(if (h == 0) s else concat(lit(s"$h:"), s))))
-    }
-    def sig(i: Int): Column =
-      array_min(transform(col(s"_h${i / MinhashSlicesPerMd5}"), x =>
-        substring(x,
-          (i % MinhashSlicesPerMd5) * MinhashSliceHexChars + 1,
-          MinhashSliceHexChars)))
-    val bandArr = array((0 until bands).map { j =>
-      md5(concat_ws("|",
-        lit(j.toString) +: (0 until r).map(i => sig(j * r + i)): _*))
-    }: _*)
-    withH
-      .withColumn("bands", when(size(col("_sh")) > 0, bandArr))
-      .drop((0 until nMd5).map(h => s"_h$h") :+ "_sh": _*)
-  }
+                          bands: Int = 4): DataFrame =
+    docs.withColumn("bands",
+      graft.functions.MinhashBandKeys.minhash_band_keys(
+        shingles(tokens(col("text")), 3), k, bands))
 
   /** Exploded (doc_id, band) LSH keys via the BATCH signature path
     * (explode + partial-agg [[withMinhashSignature]], then the band
@@ -1668,10 +1628,6 @@ object TextOps {
     words
   }
 
-  private[graft] def bloomWindowWords(benchmark: DataFrame, n: Int,
-                                      mBits: Int): Array[Long] =
-    bloomWordsDense(bloomWordFrame(benchmark, n, mBits).collect(), mBits)
-
   /** Per-row count of distinct n-token windows whose BOTH bloom bits are
     * set in `words` — a pure codegen projection (array HOFs + two
     * element_at probes per window against the literal word table), zero
@@ -1695,106 +1651,5 @@ object TextOps {
     size(filter(
       array_distinct(transform(shingles(tokens(text), n), w => md5(w))),
       wh => bitSet(wh, 1) && bitSet(wh, 2))).cast("long")
-  }
-
-  // ---- Gopher document-quality rules ----------------------------------
-
-  /** The Gopher document-level quality rules (Rae et al. 2021, §A1.1 /
-    * Table A1) as one per-document verdict row: word-count bounds, mean
-    * word-length bounds, symbol-to-word ratio, alphabetic-word fraction,
-    * and a minimum distinct-stopword count. Every ratio test is stated as
-    * an INTEGER cross-multiplication (`10·n_sym < n_words`, `5·n_alpha ≥
-    * 4·n_words`, `3·n ≤ Σlen ≤ 10·n`) so no double ever crosses the
-    * engine boundary and no threshold sits on a rounding edge.
-    *
-    * Scale shape: a single projection — per-doc token-array folds, no
-    * explode, no shuffle until the caller aggregates; whole-stage codegen
-    * end to end. The 100 TB form is exactly this map over the corpus.
-    */
-  def gopherRules(docs: DataFrame,
-                  minWords: Int = 30, maxWords: Int = 100000): DataFrame = {
-    val toks = tokens(col("text"))
-    // distinct stopwords PRESENT (Gopher: "contains at least 2 of ..."),
-    // not occurrence count — array_contains per marker, summed as ints
-    val stopPresent = Stopwords
-      .map(s => when(array_contains(toks, s), 1).otherwise(0))
-      .reduce(_ + _)
-    docs
-      .withColumn("n_words", size(toks).cast("long"))
-      .withColumn("sum_word_len",
-        length(concat_ws("", toks)).cast("long"))
-      .withColumn("n_alpha_words",
-        size(filter(toks, t => t.rlike("[a-z]"))).cast("long"))
-      .withColumn("n_symbols",
-        size(regexp_extract_all(col("text"), lit("#|\\.\\.\\."), lit(0)))
-          .cast("long"))
-      .withColumn("n_stopwords_present", stopPresent.cast("long"))
-      .withColumn("ok_word_count",
-        col("n_words") >= minWords && col("n_words") <= maxWords)
-      .withColumn("ok_mean_word_len",
-        col("sum_word_len") >= col("n_words") * 3 &&
-          col("sum_word_len") <= col("n_words") * 10)
-      .withColumn("ok_symbol_ratio",
-        col("n_symbols") * 10 < col("n_words"))
-      .withColumn("ok_alpha_words",
-        col("n_alpha_words") * 5 >= col("n_words") * 4)
-      .withColumn("ok_stopwords", col("n_stopwords_present") >= 2)
-      .withColumn("keep",
-        col("ok_word_count") && col("ok_mean_word_len") &&
-          col("ok_symbol_ratio") && col("ok_alpha_words") &&
-          col("ok_stopwords"))
-      .select("doc_id", "n_words", "sum_word_len", "n_alpha_words",
-        "n_symbols", "n_stopwords_present", "ok_word_count",
-        "ok_mean_word_len", "ok_symbol_ratio", "ok_alpha_words",
-        "ok_stopwords", "keep")
-  }
-
-  // ---- winnowing fingerprints -----------------------------------------
-
-  /** Winnowing fingerprint selection (Schleimer, Wilkerson & Aiken 2003,
-    * the MOSS algorithm): hash every `k`-token gram, slide a window of
-    * `w` consecutive gram positions, select the minimum hash per window
-    * (ties: RIGHTMOST position), and emit each selected (position, hash)
-    * once per document. Guarantees every token run of `w + k - 1` tokens
-    * shares at least one selected fingerprint between near-duplicate
-    * documents — the local-overlap detector that pure min-hashing loses.
-    *
-    * Determinism across engines: the per-window argmin is computed on ONE
-    * BIGINT — `hash40 · 2^20 + (2^20 − 1 − pos)` — so `min` alone encodes
-    * the (smallest hash, rightmost position) rule; hash40 is the first 10
-    * md5 hex digits, leaving 20 low bits for positions (docs are bounded
-    * ≪ 2^20 tokens here; the scale path shards longer docs first).
-    *
-    * Scale shape: explode grams → one window partitioned by doc ordered
-    * by position with a `w`-row frame → distinct. Partitioning is by
-    * document, so parallelism is document count and no corpus-global sort
-    * or join exists anywhere.
-    */
-  def winnowingFingerprints(docs: DataFrame, k: Int = 4,
-                            w: Int = 5): DataFrame = {
-    require(k >= 1 && w >= 1, s"need k,w >= 1: k=$k w=$w")
-    val posMask = (1L << 20) - 1
-    val grams = docs
-      .select(col("doc_id"),
-        posexplode(shingles(tokens(col("text")), k)).as(Seq("pos", "g")))
-      .withColumn("h40",
-        conv(substring(md5(col("g")), 1, 10), 16, 10).cast("long"))
-      .withColumn("enc",
-        col("h40") * (posMask + 1) + (lit(posMask) - col("pos")))
-    val win = Window.partitionBy("doc_id").orderBy("pos")
-      .rowsBetween(Window.currentRow, w - 1)
-    grams
-      .withColumn("n_grams", count(lit(1))
-        .over(Window.partitionBy("doc_id")))
-      // only positions that start a FULL window select a fingerprint
-      .filter(col("pos") <= col("n_grams") - w)
-      .withColumn("sel", min(col("enc")).over(win))
-      // decode with INTEGER div/mod: a double division would lose low bits
-      // beyond 2^53 and corrupt both fields
-      .select(col("doc_id"),
-        expr(s"sel div ${posMask + 1}").as("fp_hash"),
-        (lit(posMask) - pmod(col("sel"), lit(posMask + 1))).cast("long")
-          .as("fp_pos"))
-      .distinct()
   }
 }

@@ -36,11 +36,6 @@ object VectorOps {
   def dotStatic(a: Column, b: Column, dim: Int): Column =
     (1 to dim).map(i => element_at(a, i) * element_at(b, i)).reduce(_ + _)
 
-  def l2normStatic(a: Column, dim: Int): Column = sqrt(dotStatic(a, a, dim))
-
-  def cosineStatic(a: Column, b: Column, dim: Int): Column =
-    dotStatic(a, b, dim) / (l2normStatic(a, dim) * l2normStatic(b, dim))
-
   /** Embedding dimensionality probe (one-row scan). */
   def dimOf(df: DataFrame): Int =
     df.select(size(col("embedding"))).head().getInt(0)
@@ -500,8 +495,8 @@ object VectorOps {
     * linear in the corpus. Below the cap (every declared scale factor)
     * E = centroidEvery and results are bit-identical to the uncapped form;
     * recall is governed by the probe FRACTION (a constant share of the
-    * corpus is searched at any list granularity — the IvfScaleProbe
-    * falsification), so the cap trades nothing measurable. The oracle
+    * corpus is searched at any list granularity — the r11 IVF scale
+    * falsification, SCALE.md), so the cap trades nothing measurable. The oracle
     * derives the same E and nProbe with scalar subqueries.
     */
   def topkCosineIvfAuto(corpus: DataFrame, k: Int,

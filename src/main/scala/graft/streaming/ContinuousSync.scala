@@ -46,10 +46,7 @@ object ContinuousSync {
     */
   def stop(query: StreamingQuery): Unit =
     try query.stop()
-    catch {
-      case e: org.apache.spark.SparkException
-        if e.getMessage != null && e.getMessage.contains("CANCELLED") => ()
-    }
+    catch { case e: Exception if SyncEngine.isInterruption(e) => () }
 
   /** Route SIGTERM/SIGINT through [[stop]] — the reference wires signal →
     * context-cancel → graceful ticker stop (main.go:71-72,108-113); the

@@ -149,7 +149,6 @@ object StreamingOps {
   private def streamShufflePartitions(spark: SparkSession): String = {
     val session = spark.conf.get("spark.sql.shuffle.partitions").toInt
     spark.conf.getOption("graft.stream.shufflePartitions")
-      .orElse(sys.env.get("SPARK_GRAFT_STREAM_PARTS")) // harness A/B knob
       .getOrElse(math.min(8, session).toString)
   }
 
@@ -192,9 +191,9 @@ object StreamingOps {
           // the checkpoint instead of snapshotting each store's full
           // SST set per commit — the commit path for frequent triggers
           // over table-sized state at any scale (A/B'd at sf0.1 in r19:
-          // see OPTIMIZATION_r19.md; overridable for re-measurement)
+          // see OPTIMIZATION_r19.md; decided in r20)
           "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
-            sys.env.getOrElse("SPARK_GRAFT_ROCKSDB_CHANGELOG", "true"))
+            "true")
         else Map.empty)
     val saved = overrides.keys
       .map(k => k -> spark.conf.getOption(k)).toMap

@@ -78,15 +78,7 @@ object CaptionRecall {
     val rest = if (topk) args.drop(1) else args
     val sfDirs = rest(0).split(',').toSeq
     val tau = if (rest.length > 1) rest(1).toDouble else 0.9
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     import graft.functions.ArrayMath.{dot_product, l2_norm}
 
     if (topk) {

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dumps formatted physical plans for the load-bearing queries into
   * EXPLAINS.md — the plan-shape audit trail behind SCALE.md's claims.
@@ -77,23 +76,14 @@ object Explains {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     val sb = new StringBuilder
     sb.append("# EXPLAINS — formatted physical plans (generated by ")
     sb.append("`graft.tools.Explains`)\n\n")
     sb.append("Audit trail for SCALE.md: pushdown (`PushedFilters`), column ")
     sb.append("pruning (`ReadSchema`), join strategy, codegen spans.\n")
     sb.append(s"Plans are AQE FINAL plans (queries executed on `$sfDir` ")
-    sb.append(s"at `local[$cpus]` before printing).\n")
+    sb.append(s"at `${spark.sparkContext.master}` before printing).\n")
     Audited.foreach { name =>
       val record = BarrierAudited(name)
       if (record) graft.operators.Barriers.armPlanRecorder()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Root-cause driver for the iterative-loop bench drift (r15 verdict
   * item 2): `embedding_kmeans_assign` read 1.22× → 1.44× of its 1.01 s
   * standing row across the r14/r15 quiet cycles and
@@ -9,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * fixed-point loops, and two rounds of "watch" produced no mechanism.
   *
   * This probe runs both declared queries `reps` times in ONE JVM under
-  * the Bench session config (local[32], shuffle=32, AQE on, noop sink,
+  * the Bench session config (graft.Session.local(), noop sink,
   * same between-query cache purge) with
   * [[graft.operators.LoopProbe]] enabled, and prints one JSON line per
   * rep: total seconds plus the per-round (phase, secs) breakdown from
@@ -35,16 +33,7 @@ object LoopDrift {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val reps = if (args.length > 1) args(1).toInt else 6
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     graft.operators.LoopProbe.enable()
     // SPARK_GRAFT_LOOP_QUERIES overrides the audited pair — any declared
     // query that drives a LoopProbe'd fixed-point loop can be probed

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query plan dump for the optimization-round evidence trail
   * (plans/r19/<query>_<suffix>.txt): the AQE-final formatted physical
@@ -27,16 +26,7 @@ object PlanDump {
         s"unknown queries: ${unknown.mkString(",")} (see SparkEntry.queries)")
       sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     Files.createDirectories(Paths.get(outDir))
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val stages = new java.util.concurrent.atomic.AtomicInteger
@@ -59,7 +49,7 @@ object PlanDump {
       Thread.sleep(300)
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-      val hdr = f"== $name @ $sfDir (local[$cpus]) ==%n" +
+      val hdr = f"== $name @ $sfDir (${spark.sparkContext.master}) ==%n" +
         f"jobs=${jobs.get} stages=${stages.get} wall=${secs}%.2fs%n%n"
       Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"),
         hdr + plan)

@@ -127,15 +127,7 @@ object Recall {
   def main(args: Array[String]): Unit = {
     val sfDirs = args(0).split(',').toSeq
     val k = if (args.length > 1) args(1).toInt else 5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     val perScale = sfDirs.map { sfDir =>
       val (n, rows) = measure(spark, sfDir, k)

@@ -161,16 +161,7 @@ object ScaleRehearsal {
       if (args.nonEmpty)
         args.toSeq.flatMap(a => if (a == "streams") StreamQueries else Seq(a))
       else DefaultQueries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     // results append to a file as they land — a crashed or piped run keeps
     // everything measured so far (the r11 first run lost its timings to a
     // tail pipe AND a query abort; never again)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Rewrite a testdata SF directory with SPLITTABLE tables (r20, verdict
   * item 6): every driver testdata table is ONE parquet row group, so
   * every scan is one task and 8 cores ≈ 32 cores for map-heavy rows —
@@ -24,13 +22,7 @@ object SplitRowGroups {
     }
     val Array(src, dst) = args.take(2)
     val files = if (args.length > 2) args(2).toInt else 8
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     val tables = new java.io.File(src).listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.getName).sorted
     tables.foreach { t =>

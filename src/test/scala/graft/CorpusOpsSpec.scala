@@ -24,6 +24,25 @@ class CorpusOpsSpec extends AnyFunSuite {
       (4L, 4L, false), (5L, 4L, true)))     // length tie -> lowest id
   }
 
+  /** Driver-side reference: union-find over the collected edges, every
+    * id (node or edge endpoint) mapped to its component's minimum id,
+    * restricted to `nodes` — the rows connectedComponents returns.
+    */
+  private def unionFindLabels(nodes: Seq[Long],
+                              edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    // union by min root: every root is its component's minimum id
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    nodes.map(n => n -> find(n)).toMap
+  }
+
   test("connected components resolve chains, not just direct pairs") {
     val nodes = (1L to 6L).toDF("doc_id")
     // 1-2, 2-3 chain; 5-6 pair; 4 singleton
@@ -58,15 +77,13 @@ class CorpusOpsSpec extends AnyFunSuite {
     intercept[IllegalStateException] {
       CorpusOps.connectedComponents(nodes, edges, maxIter = 2)
     }
-    // the r19 jump loop stays available for A/B under graft.cc.impl and
-    // must compute the identical fixpoint at its own round semantics
-    val jump = CorpusOps.connectedComponentsJump(nodes, edges, maxIter = 4)
-      .as[(Long, Long)].collect()
-    assert(jump.forall(_._2 == 1L))
+    val ref = unionFindLabels((1L to n.toLong),
+      (1 until n).map(i => (i.toLong, (i + 1).toLong)))
+    assert(got.toMap == ref)
   }
 
   test("contraction components: random-id chain converges in O(log n) " +
-       "rounds and matches the jump loop") {
+       "rounds and matches a union-find reference") {
     // random id placement along a chain is the shape pointer jumping
     // cannot accelerate (r19 probe: ~40-70 rounds for 200 nodes under any
     // jump depth); contraction merges at every local minimum, so the
@@ -74,14 +91,12 @@ class CorpusOpsSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(7)
     val ids = rnd.shuffle((1L to 200L).toVector)
     val nodes = ids.toDF("doc_id")
-    val edges = (0 until 199).map(i => (ids(i), ids(i + 1)))
-      .toDF("doc_a", "doc_b")
+    val pairs = (0 until 199).map(i => (ids(i), ids(i + 1)))
+    val edges = pairs.toDF("doc_a", "doc_b")
     val got = CorpusOps.connectedComponents(nodes, edges, maxIter = 10)
       .as[(Long, Long)].collect().toMap
     assert(got.size == 200 && got.values.forall(_ == 1L))
-    val jump = CorpusOps.connectedComponentsJump(nodes, edges, maxIter = 200)
-      .as[(Long, Long)].collect().toMap
-    assert(jump == got)
+    assert(got == unionFindLabels(ids, pairs))
   }
 
   test("contraction components: a foreign edge endpoint conducts " +
@@ -91,10 +106,12 @@ class CorpusOpsSpec extends AnyFunSuite {
     // tolerance the scaladoc states; the jump lookup is a left join so
     // no node's row is lost)
     val nodes = Seq(5L, 9L, 12L).toDF("doc_id")
-    val edges = Seq((5L, 0L), (0L, 9L)).toDF("doc_a", "doc_b")
+    val pairs = Seq((5L, 0L), (0L, 9L))
+    val edges = pairs.toDF("doc_a", "doc_b")
     val got = CorpusOps.connectedComponents(nodes, edges)
       .as[(Long, Long)].collect().toMap
     assert(got == Map(5L -> 0L, 9L -> 0L, 12L -> 12L))
+    assert(got == unionFindLabels(Seq(5L, 9L, 12L), pairs))
   }
 
   test("pointer jumping: a 1000-hop chain converges in O(log d) rounds") {

@@ -977,4 +977,24 @@ class SyncEngineSpec extends AnyFunSuite {
       s"copies were forgotten after a tagging failure: ${r2.head}")
     assert(r2.head.tagFailed == 0)
   }
+
+  test("sync cycles leave no cached frames behind in the session") {
+    // every cycle re-scans its catalogs, so nothing a cycle caches can be
+    // reused by the next one; a continuous-sync trigger that left them
+    // cached would grow the session's CacheManager without bound
+    val root = Files.createTempDirectory("graft-sync-cache")
+    write(root.resolve("src/a.txt"), "a")
+    write(root.resolve("src/b.txt"), "b")
+    val engine = new SyncEngine(spark, mkConfig(root))
+    spark.sharedState.cacheManager.clearCache()
+    for (i <- 1 to 3) {
+      write(root.resolve(s"src/new$i.txt"), s"new $i")
+      if (i == 2) Files.delete(root.resolve("src/a.txt"))
+      val r = engine.syncAll().head
+      assert(r.synced == (if (i == 1) 3 else 1) && r.failed == 0, s"$r")
+      assert(r.orphansRemoved == (if (i == 2) 1 else 0), s"$r")
+    }
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "sync cycles left cached frames in the session's CacheManager")
+  }
 }
