@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.config.{MappingConf, SyncConfig}
-import graft.operators.{CopyExecutor, SyncOps}
+import graft.operators.{Barriers, CopyExecutor, SyncOps}
 import graft.sources.ObjectStoreCatalog
 
 /** The library facade (reference `README.md:51-82` embedding sequence:
@@ -51,7 +51,7 @@ class SyncEngine(spark: SparkSession, config: SyncConfig,
     val it = config.mappings.iterator
     var interrupted = false
     while (!interrupted && it.hasNext)
-      out ++= runMapping(it.next(), concurrent = false) {
+      out ++= runMapping(it.next()) {
         Thread.currentThread().interrupt()
         interrupted = true
       }
@@ -70,12 +70,12 @@ class SyncEngine(spark: SparkSession, config: SyncConfig,
     * is no shared write resource left between different mappings at all:
     * each commit swaps only its own `mapping_id=<mid>/` dir under a
     * per-partition lock, and the heavy phases (catalog scans, diff join,
-    * distributed copy, orphan delete) overlap freely. Each mapping diffs
-    * against an eagerly-pinned ledger SNAPSHOT (localCheckpoint) so a
-    * concurrent commit's directory swap cannot invalidate in-flight
-    * reads, and commits re-read their CURRENT partition under the lock so
-    * no update from a same-mapping peer driver is lost. Per-mapping
-    * failure isolation matches
+    * distributed copy, orphan delete) overlap freely. Each mapping reads
+    * only its own partition, once, when its diff barrier materializes at
+    * the start of its cycle, so another mapping's partition swap never
+    * touches an in-flight read, and commits re-read their CURRENT
+    * partition under the lock so no update from a same-mapping peer
+    * driver is lost. Per-mapping failure isolation matches
     * [[syncAll()]]: a failed mapping logs and the rest complete; an
     * interrupt (stop in progress) aborts mappings not yet started.
     *
@@ -95,7 +95,7 @@ class SyncEngine(spark: SparkSession, config: SyncConfig,
         pool.submit(new java.util.concurrent.Callable[Option[MappingReport]] {
           def call(): Option[MappingReport] =
             if (aborted.get()) None
-            else runMapping(m, concurrent = true)(aborted.set(true))
+            else runMapping(m)(aborted.set(true))
         })
       }
       tasks.flatMap(t => t.get())
@@ -107,9 +107,9 @@ class SyncEngine(spark: SparkSession, config: SyncConfig,
     * interrupt (stop in progress) logs as expected, runs `onInterrupt`
     * and yields None.
     */
-  private def runMapping(m: MappingConf, concurrent: Boolean)(
+  private def runMapping(m: MappingConf)(
       onInterrupt: => Unit): Option[MappingReport] =
-    try Some(syncMapping(m, concurrent))
+    try Some(syncMapping(m))
     catch {
       case e: Exception if isInterruption(e) =>
         System.err.println(s"[sync] mapping ${m.mappingId} cycle " +
@@ -128,55 +128,46 @@ class SyncEngine(spark: SparkSession, config: SyncConfig,
         None
     }
 
-  /** SyncBuckets (sync.go:56-176) as a relational plan + two executors. */
-  def syncMapping(m: MappingConf): MappingReport =
-    syncMapping(m, concurrent = false)
-
-  /** The cycle's cached frames (source catalog, decided diff) live only
-    * for this cycle — the next one re-scans — so they are unpersisted,
+  /** SyncBuckets (sync.go:56-176) as a relational plan + two executors.
+    * The cycle's barriers (diff, copy receipts, delete receipts) live
+    * only for this cycle — the next one re-scans — so they are released,
     * newest first, once the ledger commit and orphan delete are done.
     */
-  private def syncMapping(m: MappingConf, concurrent: Boolean): MappingReport = {
-    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def pin(df: DataFrame): DataFrame = { cached += df; df.cache() }
-    try syncMapping(m, concurrent, pin)
-    finally cached.reverseIterator.foreach(_.unpersist())
+  private def syncMapping(m: MappingConf): MappingReport = {
+    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def pin(df: DataFrame): DataFrame = {
+      val b = Barriers.materialize(df, eager = true)
+      pinned += b
+      b
+    }
+    try cycle(m, pin)
+    finally pinned.reverseIterator.foreach(Barriers.release)
   }
 
-  private def syncMapping(m: MappingConf, concurrent: Boolean,
-                          pin: DataFrame => DataFrame): MappingReport = {
+  private def cycle(m: MappingConf,
+                    pin: DataFrame => DataFrame): MappingReport = {
     val srcUri = config.sourceUri(m)
     val dstUri = config.targetUri(m)
     val mid = m.mappingId
-    // scratch dirs are per-mapping so concurrent mappings cannot clobber
-    // each other's receipts; sanitized because mapping ids carry ':'/'>'
-    // which Hadoop Path parsing would misread as a scheme separator
-    val scratch = config.ledgerPath + ".scratch/" +
-      mid.replaceAll("[^A-Za-z0-9._-]", "_")
 
     // 1-4: scans + DDL (bucket_exists_guard gives empty catalog, not error)
-    val srcCatalog = pin(ObjectStoreCatalog.scanCatalog(spark, srcUri))
+    val srcCatalog = ObjectStoreCatalog.scanCatalog(spark, srcUri)
     val tgtCatalog = ObjectStoreCatalog.scanCatalog(spark, dstUri)
     ObjectStoreCatalog.ensureBucket(spark, dstUri)
 
     // 5-6b: diff join + predicate (replaces the reference's N+1 loop).
-    // Concurrent mode pins the ledger snapshot eagerly: another mapping's
-    // commit swaps the ledger DIRECTORY, and a lazy read (or a cache
-    // eviction's recompute) over the old directory would hit deleted
-    // files mid-cycle. The snapshot is also the correct semantics — a
-    // cycle diffs against the ledger as of its start, and other mappings'
-    // commits never touch this mapping's rows.
-    val ledgerRead = readLedger(spark, config.ledgerPath)
-    val ledger = if (concurrent) ledgerRead.localCheckpoint(true) else ledgerRead
-    val decided = pin(SyncOps.catalogLedgerDiff(srcCatalog, ledger, mid))
+    // The eager barrier reads the ledger once, here, before any copy: the
+    // cycle diffs against the ledger as of its start, and the commit
+    // below may then swap the partition this read listed.
+    val decided = pin(SyncOps.catalogLedgerDiff(srcCatalog,
+      readLedger(spark, config.ledgerPath), mid))
     val toCopy = SyncOps.needsSync(decided)
 
     // 6c-6d: distributed stream copy. Receipts MUST be materialized before
     // reuse: the executor is side-effecting, and a lazy plan would re-run
     // the copies once per downstream action.
-    val receipts = materialize(spark,
-      CopyExecutor.copyObjects(spark, toCopy, srcUri, dstUri).toDF(),
-      scratch + "/copy_receipts")
+    val receipts = pin(
+      CopyExecutor.copyObjects(spark, toCopy, srcUri, dstUri).toDF())
 
     // post-copy tagging hook (README "Known limitations" → code): the
     // reference sets Content-Type/user-metadata headers on every PUT;
@@ -235,14 +226,13 @@ class SyncEngine(spark: SparkSession, config: SyncConfig,
     // mapping regardless of catalog size
     val counts = SyncOps.syncOutcomeCounts(decided, mid)
       .collect().map(r => r.getString(1) -> r.getLong(2)).toMap
-    val failed = updates.filter(col("sync_status") =!= "success").count()
+    val failed = receipts.filter(col("sync_status") =!= "success").count()
 
     // 8: orphans — delete from target, then from ledger (sync.go:199-234);
     // failed deletes keep their ledger rows (sync.go:217-221)
     val orphans = SyncOps.orphanAntiJoin(tgtCatalog, srcCatalog)
-    val deleteReceipts = materialize(spark,
-      CopyExecutor.deleteObjects(spark, orphans, dstUri).toDF(),
-      scratch + "/delete_receipts")
+    val deleteReceipts = pin(
+      CopyExecutor.deleteObjects(spark, orphans, dstUri).toDF())
     val removedNames = deleteReceipts.filter(col("removed"))
       .select(col("object_name").as("name"))
     val removed = removedNames.count()
@@ -258,9 +248,9 @@ class SyncEngine(spark: SparkSession, config: SyncConfig,
     // the reference's per-row SQLite upsert cost model
     // (internal/database/database.go:346-364) — and commits of DIFFERENT
     // mappings no longer serialize at all; only two drivers syncing the
-    // SAME mapping contend. updates/doomed reference only materialized
-    // receipts and the pinned snapshot, so the in-lock work is the cheap
-    // per-partition merge, never the copies.
+    // SAME mapping contend. updates/doomed reference only the cycle's
+    // barriers, so the in-lock work is the cheap per-partition merge,
+    // never the copies or the cycle's ledger read.
     val doomed = removedNames.select(lit(mid).as("mapping_id"),
                                      col("name").as("object_name"))
     val changedRows = counts.getOrElse("sync_new", 0L) +
@@ -652,15 +642,6 @@ object SyncEngine {
           catch { case _: java.io.IOException => () }
       }
     }
-  }
-
-  /** Execute-once barrier for side-effecting executor outputs: dump to a
-    * scratch parquet and read back, so downstream actions replay the file,
-    * not the side effects.
-    */
-  def materialize(spark: SparkSession, df: DataFrame, path: String): DataFrame = {
-    df.write.mode(SaveMode.Overwrite).parquet(path)
-    spark.read.parquet(path)
   }
 
   /** v3 adds `metadata`: the reference DROPS user metadata at the ledger

@@ -30,6 +30,14 @@ import org.apache.spark.storage.StorageLevel
   * Every former `localCheckpoint` call site routes through here, so the
   * minhash/jaccard/LSH/components pipelines run unchanged on a real
   * cluster by flipping one conf.
+  *
+  * The sync cycle (`SyncEngine`) relies on an eager barrier to run each
+  * copy and each delete once: its receipts are read by several actions
+  * (tagger, failure count, ledger commit), and a lazy plan would repeat
+  * the side effects per action. Under `persist` a lost block recomputes
+  * from lineage and so re-runs those copies or deletes; the copy
+  * executor's at-least-once, idempotent-target contract already allows
+  * that.
   */
 object Barriers {
 

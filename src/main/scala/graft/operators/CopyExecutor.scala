@@ -34,16 +34,13 @@ object CopyExecutor {
     * the UploadInfo analog (provider.go:19-24) plus status for the ledger.
     */
   def copyObjects(spark: SparkSession, tasks: DataFrame,
-                  srcBucket: String, dstBucket: String,
-                  partitions: Int = 0): Dataset[Receipt] = {
+                  srcBucket: String, dstBucket: String): Dataset[Receipt] = {
     import spark.implicits._
     val ts = tasks.select(col("name"), col("size"), col("content_type")).as[CopyTask]
-    val repartitioned =
-      if (partitions > 0) ts.repartition(partitions) else ts
     // Session conf rides the closure so task-side FileSystems see the
     // ProviderFactory endpoints/credentials (not just core-site defaults).
     val taskConf = TaskConf(spark)
-    repartitioned.mapPartitions { it =>
+    ts.mapPartitions { it =>
       val conf = taskConf.value
       val srcFs = FileSystem.get(URI.create(srcBucket), conf)
       val dstFs = FileSystem.get(URI.create(dstBucket), conf)

@@ -56,13 +56,18 @@ object ObjectStoreCatalog {
     java.lang.Long.toHexString(size * 1000003L ^ mtimeMs)
 
   /** Driver-side recursive listing → catalog DataFrame. Fine up to ~1e5
-    * objects; beyond that use [[scanCatalogDistributed]].
+    * objects; beyond that use [[scanCatalogDistributed]]. The rows are on
+    * the driver, so the frame carries their size as its estimate, where an
+    * RDD-backed frame would otherwise count as unboundedly large: joins
+    * against a catalog, and against barriers derived from one, broadcast.
     */
   def scanCatalog(spark: SparkSession, bucketUri: String): DataFrame = {
     val rows = listPrefix(new Configuration(spark.sparkContext.hadoopConfiguration),
                           bucketUri, "")
-    spark.createDataFrame(
+    val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows.toSeq, 1), CatalogSchema)
+    graft.operators.Barriers.withSizeEstimate(df, rows.length,
+                                              CatalogSchema.defaultSize)
   }
 
   /** Distributed listing for huge buckets: the driver lists only the

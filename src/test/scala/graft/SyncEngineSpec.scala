@@ -25,6 +25,12 @@ class SyncEngineSpec extends AnyFunSuite {
     mappings = Seq(MappingConf("local", "src", "local", "dst")),
     ledgerPath = s"$root/ledger")
 
+  /** Two mappings `src{1,2}` → `dst{1,2}` sharing one ledger under `root`. */
+  private def mkConfig2(root: Path): SyncConfig = SyncConfig(
+    providers = Seq(ProviderConf("local", "file", s"file://$root")),
+    mappings = (1 to 2).map(i => MappingConf("local", s"src$i", "local", s"dst$i")),
+    ledgerPath = s"$root/ledger")
+
   test("full sync cycle: copy, ledger, skip, orphan delete") {
     val root = Files.createTempDirectory("graft-sync")
     write(root.resolve("src/file1.txt"), "test")   // mirrors sync_test.go:80
@@ -979,22 +985,73 @@ class SyncEngineSpec extends AnyFunSuite {
   }
 
   test("sync cycles leave no cached frames behind in the session") {
-    // every cycle re-scans its catalogs, so nothing a cycle caches can be
-    // reused by the next one; a continuous-sync trigger that left them
-    // cached would grow the session's CacheManager without bound
+    // every cycle re-scans its catalogs, so nothing a cycle pins can be
+    // reused by the next one; a continuous-sync trigger that left its
+    // barrier blocks or cached frames behind would grow the session
+    // without bound. Both syncAll overloads run, over two mappings.
     val root = Files.createTempDirectory("graft-sync-cache")
-    write(root.resolve("src/a.txt"), "a")
-    write(root.resolve("src/b.txt"), "b")
-    val engine = new SyncEngine(spark, mkConfig(root))
-    spark.sharedState.cacheManager.clearCache()
-    for (i <- 1 to 3) {
-      write(root.resolve(s"src/new$i.txt"), s"new $i")
-      if (i == 2) Files.delete(root.resolve("src/a.txt"))
-      val r = engine.syncAll().head
-      assert(r.synced == (if (i == 1) 3 else 1) && r.failed == 0, s"$r")
-      assert(r.orphansRemoved == (if (i == 2) 1 else 0), s"$r")
+    for (m <- 1 to 2) {
+      write(root.resolve(s"src$m/a.txt"), "a")
+      write(root.resolve(s"src$m/b.txt"), "b")
     }
+    val engine = new SyncEngine(spark, mkConfig2(root))
+    spark.sharedState.cacheManager.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    for (i <- 1 to 4) {
+      for (m <- 1 to 2) {
+        write(root.resolve(s"src$m/new$i.txt"), s"new $i")
+        if (i == 2) Files.delete(root.resolve(s"src$m/a.txt"))
+      }
+      val rs = if (i % 2 == 1) engine.syncAll() else engine.syncAll(2)
+      assert(rs.size == 2, s"$rs")
+      rs.foreach { r =>
+        assert(r.synced == (if (i == 1) 3 else 1) && r.failed == 0, s"$r")
+        assert(r.orphansRemoved == (if (i == 2) 1 else 0), s"$r")
+      }
+    }
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"sync cycles left persistent RDDs $left pinned")
     assert(spark.sharedState.cacheManager.isEmpty,
       "sync cycles left cached frames in the session's CacheManager")
+  }
+
+  test("a sync cycle writes only the target and the ledger") {
+    // receipts and the diff stay in the session; no scratch directory
+    // appears beside the ledger, in either syncAll mode
+    val root = Files.createTempDirectory("graft-sync-noscratch")
+    for (m <- 1 to 2; f <- Seq("a", "b", "c", "d"))
+      write(root.resolve(s"src$m/$f.txt"), s"$m-$f")
+    val cfg = mkConfig2(root)
+    val engine = new SyncEngine(spark, cfg)
+    val seeded = engine.syncAll()
+    assert(seeded.forall(r => r.synced == 4 && r.failed == 0), s"$seeded")
+    // per mapping and cycle: one changed object (a longer body, so its
+    // size and etag move whatever the mtime granularity) and one orphan
+    def expectOneChangeOneOrphan(changed: String, orphan: String,
+                                 skipped: Long)(
+        run: => Seq[engine.MappingReport]): Unit = {
+      for (m <- 1 to 2) {
+        write(root.resolve(s"src$m/$changed.txt"), s"$m-$changed-v2")
+        Files.delete(root.resolve(s"src$m/$orphan.txt"))
+      }
+      val rs = run
+      assert(rs.map(_.mappingId).sorted == cfg.mappings.map(_.mappingId).sorted)
+      rs.foreach { r =>
+        assert(r == engine.MappingReport(r.mappingId, synced = 1,
+          skipped = skipped, failed = 0, orphansRemoved = 1), s"$r")
+      }
+      for (m <- 1 to 2) {
+        assert(new String(Files.readAllBytes(
+          root.resolve(s"dst$m/$changed.txt"))) == s"$m-$changed-v2")
+        assert(!Files.exists(root.resolve(s"dst$m/$orphan.txt")))
+      }
+      assert(!Files.exists(Paths.get(cfg.ledgerPath + ".scratch")),
+        "the cycle wrote a scratch directory beside the ledger")
+      val names = root.toFile.list().toSet
+      assert(names == Set("src1", "src2", "dst1", "dst2", "ledger"),
+        s"unexpected entries beside the buckets and ledger: $names")
+    }
+    expectOneChangeOneOrphan("a", "d", skipped = 2)(engine.syncAll())
+    expectOneChangeOneOrphan("b", "c", skipped = 1)(engine.syncAll(2))
   }
 }
