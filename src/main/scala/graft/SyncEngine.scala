@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -29,10 +29,10 @@ class SyncEngine(spark: SparkSession, config: SyncConfig,
     * succeeded: objects copied, ledger committed) — a flaky tagging SDK
     * must surface without wedging sync progress (r15 advisory).
     * Granularity caveat: a tagger failure is counted as the WHOLE
-    * taggable batch even if some objects in it were tagged before the
-    * throw (the tagger API gives no partial-progress signal), so this
-    * may overcount; -1 means the count itself could not be taken
-    * (broken session).
+    * taggable batch (the cycle's successful copies, as counted by its
+    * copy barrier) even if some objects in it were tagged before the
+    * throw — the tagger API gives no partial-progress signal, so this
+    * may overcount.
     */
   case class MappingReport(mappingId: String, synced: Long, skipped: Long,
                            failed: Long, orphansRemoved: Long,
@@ -71,13 +71,13 @@ class SyncEngine(spark: SparkSession, config: SyncConfig,
     * each commit swaps only its own `mapping_id=<mid>/` dir under a
     * per-partition lock, and the heavy phases (catalog scans, diff join,
     * distributed copy, orphan delete) overlap freely. Each mapping reads
-    * only its own partition, once, when its diff barrier materializes at
-    * the start of its cycle, so another mapping's partition swap never
-    * touches an in-flight read, and commits re-read their CURRENT
-    * partition under the lock so no update from a same-mapping peer
-    * driver is lost. Per-mapping failure isolation matches
-    * [[syncAll()]]: a failed mapping logs and the rest complete; an
-    * interrupt (stop in progress) aborts mappings not yet started.
+    * only its own `mapping_id=<mid>/` dir, once, when its diff barrier
+    * materializes at the start of its cycle, so no peer's swap — in
+    * flight or crashed — can stall or fail that read, and commits re-read
+    * their CURRENT partition under the lock so no update from a
+    * same-mapping peer driver is lost. Per-mapping failure isolation
+    * matches [[syncAll()]]: a failed mapping logs and the rest complete;
+    * an interrupt (stop in progress) aborts mappings not yet started.
     *
     * Caveat, documented not hidden: mappings whose TARGET prefixes
     * overlap should stay sequential — one mapping's orphan deletion can
@@ -129,23 +129,28 @@ class SyncEngine(spark: SparkSession, config: SyncConfig,
     }
 
   /** SyncBuckets (sync.go:56-176) as a relational plan + two executors.
-    * The cycle's barriers (diff, copy receipts, delete receipts) live
+    * The cycle's three eager barriers (diff, copy receipts, delete
+    * receipts) carry its counters as `Dataset.observe` metrics, and live
     * only for this cycle — the next one re-scans — so they are released,
     * newest first, once the ledger commit and orphan delete are done.
     */
   private def syncMapping(m: MappingConf): MappingReport = {
     val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def pin(df: DataFrame): DataFrame = {
-      val b = Barriers.materialize(df, eager = true)
+    // each barrier's counts ride on its own job; `Observation.get` blocks
+    // until that action has delivered them
+    def pin(df: DataFrame, counts: Seq[Column]): (DataFrame, Map[String, Long]) = {
+      val o = new Observation()
+      val b = Barriers.materialize(df.observe(o, counts.head, counts.tail: _*),
+                                   eager = true)
       pinned += b
-      b
+      (b, o.get.map { case (k, v) => k -> v.asInstanceOf[Long] })
     }
     try cycle(m, pin)
     finally pinned.reverseIterator.foreach(Barriers.release)
   }
 
-  private def cycle(m: MappingConf,
-                    pin: DataFrame => DataFrame): MappingReport = {
+  private def cycle(m: MappingConf, pin: (DataFrame, Seq[Column]) =>
+                      (DataFrame, Map[String, Long])): MappingReport = {
     val srcUri = config.sourceUri(m)
     val dstUri = config.targetUri(m)
     val mid = m.mappingId
@@ -155,55 +160,58 @@ class SyncEngine(spark: SparkSession, config: SyncConfig,
     val tgtCatalog = ObjectStoreCatalog.scanCatalog(spark, dstUri)
     ObjectStoreCatalog.ensureBucket(spark, dstUri)
 
+    // a pre-partition-layout (legacy whole-table) ledger is migrated once,
+    // under the global table lock, before this mapping reads its partition
+    SyncEngine.ensurePartitionedLayout(spark, config.ledgerPath)
+
     // 5-6b: diff join + predicate (replaces the reference's N+1 loop).
-    // The eager barrier reads the ledger once, here, before any copy: the
-    // cycle diffs against the ledger as of its start, and the commit
-    // below may then swap the partition this read listed.
-    val decided = pin(SyncOps.catalogLedgerDiff(srcCatalog,
-      readLedger(spark, config.ledgerPath), mid))
+    // The eager barrier reads this mapping's partition once, here, before
+    // any copy: the cycle diffs against the ledger as of its start, and
+    // the commit below may then swap the partition this read listed. The
+    // outcome counters (sync.go:97-99,166-170) ride on the same job.
+    val (decided, diff) = pin(SyncOps.catalogLedgerDiff(srcCatalog,
+        readLedgerPartition(spark, config.ledgerPath, mid), mid),
+      Seq(countWhere(col("action") =!= "skip", "changed"),
+          countWhere(col("action") === "skip", "skipped")))
     val toCopy = SyncOps.needsSync(decided)
 
     // 6c-6d: distributed stream copy. Receipts MUST be materialized before
     // reuse: the executor is side-effecting, and a lazy plan would re-run
     // the copies once per downstream action.
-    val receipts = pin(
-      CopyExecutor.copyObjects(spark, toCopy, srcUri, dstUri).toDF())
+    val (receipts, copy) = pin(
+      CopyExecutor.copyObjects(spark, toCopy, srcUri, dstUri).toDF(),
+      Seq(countWhere(col("sync_status") === "success", "copied"),
+          countWhere(col("sync_status") =!= "success", "failed")))
 
     // post-copy tagging hook (README "Known limitations" → code): the
     // reference sets Content-Type/user-metadata headers on every PUT;
     // the Hadoop-FS copy path cannot, so a deployment-supplied tagger
-    // gets exactly the success receipts' header columns to re-apply via
-    // its provider SDK. Noop (the default) costs nothing; the guard
-    // keeps all-skip cycles from running a count job per mapping when
-    // no tagger is configured. The frame is pinned once (Barriers) so
-    // the isEmpty guard and the tagger's own action share one evaluation
-    // of the receipts join instead of running it twice (r15 advisory).
+    // gets the success receipts joined back to the catalog's header
+    // columns — one row per object PHYSICALLY written. The frame is lazy
+    // over the pinned barriers (no copy re-runs), and a cycle that copied
+    // nothing never calls the tagger.
     var tagFailed = 0L
-    if (!(tagger eq graft.sources.PostCopyTagger.Noop)) {
-      val tagged = graft.operators.Barriers.materialize(
-        SyncEngine.taggableReceipts(toCopy, receipts), eager = true)
-      try {
+    if (copy("copied") > 0) {
+      val tagged = toCopy.alias("t")
+        .join(receipts.filter(col("sync_status") === "success").alias("r"),
+              col("t.name") === col("r.object_name"))
+        .select(col("t.name").as("object_name"),
+                col("t.content_type"), col("t.metadata"))
+      try tagger.tag(mid, dstUri, tagged)
+      catch {
         // tagger failure is NOT a cycle failure: the objects ARE copied
         // and the ledger upsert below must still record them, or every
         // successful copy would be forgotten and re-copied (and re-tagged)
-        // next cycle. The failed tags surface in MappingReport.tagFailed;
-        // the next cycle's tagger sees only ITS copies, so re-tagging is
-        // the deployment's retry loop (PostCopyTagger scaladoc contract).
-        if (!tagged.isEmpty) tagger.tag(mid, dstUri, tagged)
-      } catch {
+        // next cycle. The whole batch counts as failed (no partial-progress
+        // signal); the next cycle's tagger sees only ITS copies, so
+        // re-tagging is the deployment's retry loop (PostCopyTagger).
         case e: Exception if !isInterruption(e) =>
-          // count over the pinned blocks; if even that fails the session
-          // is broken and the -1 sentinel says "failed, count unknown"
-          tagFailed = try tagged.count()
-                      catch { case _: Exception => -1L }
-          val batchDesc =
-            if (tagFailed >= 0) s"a batch of $tagFailed object(s)"
-            else "a batch of unknown size (count failed)"
+          tagFailed = copy("copied")
           System.err.println(s"[sync] mapping $mid post-copy tagging " +
-            s"failed for $batchDesc: ${e.getClass.getName}: " +
-            s"${e.getMessage} - copies and ledger commit proceed; " +
-            "re-apply headers via the tagger's own retry path")
-      } finally graft.operators.Barriers.release(tagged)
+            s"failed for a batch of ${copy("copied")} object(s): " +
+            s"${e.getClass.getName}: ${e.getMessage} - copies and ledger " +
+            "commit proceed; re-apply headers via the tagger's own retry path")
+      }
     }
 
     // 6e: ledger upsert from receipts (sync.go:179-196) — receipt status
@@ -221,21 +229,13 @@ class SyncEngine(spark: SparkSession, config: SyncConfig,
         current_timestamp().as("last_synced"),
         col("r.sync_status"),
         col("t.metadata"))
-    // driver-side collect is BOUNDED: syncOutcomeCounts groups by
-    // sync_status, so this frame is ≤ |distinct statuses| rows (3) per
-    // mapping regardless of catalog size
-    val counts = SyncOps.syncOutcomeCounts(decided, mid)
-      .collect().map(r => r.getString(1) -> r.getLong(2)).toMap
-    val failed = receipts.filter(col("sync_status") =!= "success").count()
 
     // 8: orphans — delete from target, then from ledger (sync.go:199-234);
     // failed deletes keep their ledger rows (sync.go:217-221)
     val orphans = SyncOps.orphanAntiJoin(tgtCatalog, srcCatalog)
-    val deleteReceipts = pin(
-      CopyExecutor.deleteObjects(spark, orphans, dstUri).toDF())
-    val removedNames = deleteReceipts.filter(col("removed"))
-      .select(col("object_name").as("name"))
-    val removed = removedNames.count()
+    val (deleteReceipts, deleted) = pin(
+      CopyExecutor.deleteObjects(spark, orphans, dstUri).toDF(),
+      Seq(countWhere(col("removed"), "removed")))
 
     // ledger COMMIT: reference ON-CONFLICT upsert semantics — the batch's
     // rows win unconditionally (anti-join+union, no window sort over the
@@ -251,10 +251,8 @@ class SyncEngine(spark: SparkSession, config: SyncConfig,
     // SAME mapping contend. updates/doomed reference only the cycle's
     // barriers, so the in-lock work is the cheap per-partition merge,
     // never the copies or the cycle's ledger read.
-    val doomed = removedNames.select(lit(mid).as("mapping_id"),
-                                     col("name").as("object_name"))
-    val changedRows = counts.getOrElse("sync_new", 0L) +
-      counts.getOrElse("sync_changed", 0L) + counts.getOrElse("sync_retry", 0L)
+    val doomed = deleteReceipts.filter(col("removed"))
+      .select(lit(mid).as("mapping_id"), col("object_name"))
     def commitLedger(): Unit = {
       // re-read the CURRENT partition inside the critical section (never
       // the cycle snapshot): a commit from another DRIVER syncing this
@@ -275,10 +273,7 @@ class SyncEngine(spark: SparkSession, config: SyncConfig,
     // an all-skip cycle has nothing to commit — skipping the write keeps
     // steady-state cycles from touching the ledger at all (and is what
     // lets the partition-isolation spec pin other partitions' mtimes)
-    if (changedRows > 0 || removed > 0) {
-      // a pre-partition-layout (legacy whole-table) ledger is migrated
-      // once, under the global table lock, before any partition commit
-      SyncEngine.ensurePartitionedLayout(spark, config.ledgerPath)
+    if (diff("changed") > 0 || deleted("removed") > 0) {
       // two locks, two scopes: the JVM monitor serializes this driver's
       // threads on the SAME partition (cheap, no FS round-trips while
       // waiting); the lock FILE serializes across driver processes
@@ -293,12 +288,10 @@ class SyncEngine(spark: SparkSession, config: SyncConfig,
     }
 
     MappingReport(mid,
-      synced = counts.getOrElse("sync_new", 0L) +
-               counts.getOrElse("sync_changed", 0L) +
-               counts.getOrElse("sync_retry", 0L) - failed,
-      skipped = counts.getOrElse("skip", 0L),
-      failed = failed,
-      orphansRemoved = removed,
+      synced = diff("changed") - copy("failed"),
+      skipped = diff("skipped"),
+      failed = copy("failed"),
+      orphansRemoved = deleted("removed"),
       tagFailed = tagFailed)
   }
 }
@@ -328,20 +321,10 @@ object SyncEngine {
     false
   }
 
-  /** The [[graft.sources.PostCopyTagger]] input frame: success receipts
-    * joined back to the catalog's header columns — one row per object
-    * the cycle PHYSICALLY wrote, with exactly the values the reference
-    * would have set as PUT headers. Failed/skipped copies never reach
-    * the tagger (tagging an object that was not written would fail, or
-    * worse, tag a stale body).
-    */
-  private[graft] def taggableReceipts(toCopy: DataFrame,
-                                      receipts: DataFrame): DataFrame =
-    toCopy.alias("t")
-      .join(receipts.alias("r"), col("t.name") === col("r.object_name"))
-      .filter(col("r.sync_status") === "success")
-      .select(col("t.name").as("object_name"),
-              col("t.content_type"), col("t.metadata"))
+  /** An observed count of the rows where `cond` holds: 0, not null,
+    * over an empty barrier. */
+  private def countWhere(cond: Column, name: String): Column =
+    count(when(cond, 1)).as(name)
 
   /** One TTL constant shared by the lock's staleness machinery and
     * readLedger's proof-of-life check, so the two heuristics can't drift.
@@ -733,13 +716,12 @@ object SyncEngine {
     * is absent is a partition committer that died mid-swap. Hidden names
     * (leading '.') keep in-flight/abandoned staging invisible to parquet
     * readers, so the only reader-visible anomaly is the missing dst dir
-    * this repairs. `heldSuffix` names the partition lock the CALLER
-    * holds (its own partition commits skip the liveness wait).
+    * this repairs. Only the whole-table [[readLedger]] runs this; it
+    * holds no partition lock, so every recovery defers to that lock.
     */
   private def recoverPartitionSwaps(fs: org.apache.hadoop.fs.FileSystem,
                                     path: String, swapWaitSleepMs: Long,
-                                    lockStaleTtlMs: Long,
-                                    heldEscapedMid: Option[String]): Unit = {
+                                    lockStaleTtlMs: Long): Unit = {
     val root = new org.apache.hadoop.fs.Path(path)
     if (!fs.exists(root)) return
     val names = fs.listStatus(root).map(_.getPath.getName)
@@ -755,18 +737,17 @@ object SyncEngine {
         new org.apache.hadoop.fs.Path(root, s".tmp_mapping_id=$esc"),
         new org.apache.hadoop.fs.Path(root, s".old_mapping_id=$esc"),
         new org.apache.hadoop.fs.Path(path + ".lock.p." + esc),
-        swapWaitSleepMs, lockStaleTtlMs,
-        callerHoldsLock = heldEscapedMid.contains(esc))
+        swapWaitSleepMs, lockStaleTtlMs, callerHoldsLock = false)
       // a recovered (or rolled-back) swap may leave a stale hidden tmp
       // behind; it is invisible to readers and the next commit's
       // Overwrite write replaces it, so no cleanup pass is needed here
     }
   }
 
-  /** True when the table root holds reader-visible content (partition
-    * dirs or data files) — `_SUCCESS` markers and hidden staging dirs
-    * alone are an empty ledger, and handing them to `spark.read.parquet`
-    * would throw "unable to infer schema" instead.
+  /** True when a ledger dir (the table root, or one partition) holds
+    * reader-visible content (partition dirs or data files) — `_SUCCESS`
+    * markers and hidden staging dirs alone are an empty ledger, and
+    * handing them to `spark.read.parquet` would throw instead.
     */
   private def hasVisibleData(fs: org.apache.hadoop.fs.FileSystem,
                              p: org.apache.hadoop.fs.Path): Boolean =
@@ -793,8 +774,7 @@ object SyncEngine {
       new org.apache.hadoop.fs.Path(path + ".old"),
       new org.apache.hadoop.fs.Path(path + ".lock"),
       swapWaitSleepMs, lockStaleTtlMs, callerHoldsTableLock)
-    recoverPartitionSwaps(fs, path, swapWaitSleepMs, lockStaleTtlMs,
-      heldEscapedMid = None)
+    recoverPartitionSwaps(fs, path, swapWaitSleepMs, lockStaleTtlMs)
     if (hasVisibleData(fs, p)) {
       // read with the stored schema first: a pre-mapping (v1) ledger must
       // be migrated, not silently null-filled by a forced schema
@@ -879,16 +859,17 @@ object SyncEngine {
     }
   }
 
-  /** ONE mapping's ledger rows — the partition-scoped read commits merge
-    * against. Same recovery discipline as [[readLedger]] but the waits
-    * stay per-scope: the whole-table signature defers to the GLOBAL
-    * lock's liveness (this caller never holds it), while the caller's
-    * own partition recovers immediately when it holds that partition's
-    * lock (`callerHoldsPartitionLock` — see [[recoverSwap]]).
+  /** ONE mapping's ledger rows — the read a sync cycle diffs against and
+    * its commit merges with. Same recovery discipline as [[readLedger]]
+    * but the waits stay per-scope: the whole-table signature defers to
+    * the GLOBAL lock's liveness (this caller never holds it), while the
+    * caller's own partition recovers immediately when it holds that
+    * partition's lock (`callerHoldsPartitionLock` — see [[recoverSwap]]).
     *
-    * I/O is O(|partition|): the filter on the partition column prunes
-    * the scan to `mapping_id=<mid>/` (listing is O(#mappings), a config
-    * count, never row count).
+    * Reads the `mapping_id=<mid>/` dir itself, `mapping_id` added as a
+    * literal: I/O is O(|partition|), and no other mapping's partition is
+    * listed, waited on or recovered. Expects the partitioned layout
+    * (callers run [[ensurePartitionedLayout]] first).
     */
   def readLedgerPartition(spark: SparkSession, path: String, mid: String,
                           swapWaitSleepMs: Long = 100,
@@ -902,20 +883,20 @@ object SyncEngine {
       new org.apache.hadoop.fs.Path(path + ".lock"),
       swapWaitSleepMs, lockStaleTtlMs, callerHoldsLock = false)
     val esc = escapeMappingId(mid)
-    recoverSwap(fs,
-      new org.apache.hadoop.fs.Path(p, s"mapping_id=$esc"),
+    val dir = new org.apache.hadoop.fs.Path(p, s"mapping_id=$esc")
+    recoverSwap(fs, dir,
       new org.apache.hadoop.fs.Path(p, s".tmp_mapping_id=$esc"),
       new org.apache.hadoop.fs.Path(p, s".old_mapping_id=$esc"),
       new org.apache.hadoop.fs.Path(path + partitionLockSuffix(mid)),
       swapWaitSleepMs, lockStaleTtlMs, callerHoldsPartitionLock)
-    if (hasVisibleData(fs, p)) {
-      val stored = spark.read.parquet(path)
-        .filter(org.apache.spark.sql.functions.col("mapping_id") === mid)
-      val (migrated, _) = LedgerMigrations.migrate(stored)
-      migrated.select(
-        LedgerSchema.fieldNames.toIndexedSeq
-          .map(org.apache.spark.sql.functions.col): _*)
-    } else
+    // the known schema spares a schema-inference job; a v2 file's missing
+    // `metadata` reads as null, which is the v2 → v3 migration
+    if (hasVisibleData(fs, dir))
+      spark.read.schema(StructType(LedgerSchema.filterNot(_.name == "mapping_id")))
+        .parquet(dir.toString)
+        .select(LedgerSchema.fieldNames.toIndexedSeq.map(n =>
+          if (n == "mapping_id") lit(mid).as(n) else col(n)): _*)
+    else
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], LedgerSchema)
   }

@@ -32,12 +32,14 @@ import org.apache.spark.storage.StorageLevel
   * cluster by flipping one conf.
   *
   * The sync cycle (`SyncEngine`) relies on an eager barrier to run each
-  * copy and each delete once: its receipts are read by several actions
-  * (tagger, failure count, ledger commit), and a lazy plan would repeat
-  * the side effects per action. Under `persist` a lost block recomputes
-  * from lineage and so re-runs those copies or deletes; the copy
-  * executor's at-least-once, idempotent-target contract already allows
-  * that.
+  * copy and each delete once: its receipts are read by the tagger and
+  * the ledger commit, and a lazy plan would repeat the side effects per
+  * action. Its counts are `Dataset.observe` metrics on each barrier's
+  * input, delivered by the eager action under every strategy (the
+  * `persist` branch's `count` included). Under `persist` a lost block
+  * recomputes from lineage and so re-runs those copies or deletes; the
+  * copy executor's at-least-once, idempotent-target contract already
+  * allows that.
   */
 object Barriers {
 

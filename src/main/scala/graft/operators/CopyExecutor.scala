@@ -48,8 +48,13 @@ object CopyExecutor {
       it.map { t =>
         val src = new Path(srcBucket + "/" + t.name)
         val dst = new Path(dstBucket + "/" + t.name)
+        // failed_get is the source open only (sync.go:136-140); any later
+        // error — the target's mkdirs or create, a read or write
+        // mid-stream — is an upload failure (sync.go:153-158)
+        var opened = false
         try {
           val in = srcFs.open(src)
+          opened = true
           try {
             dstFs.mkdirs(dst.getParent)
             val out = dstFs.create(dst, true)
@@ -65,11 +70,9 @@ object CopyExecutor {
           } finally in.close()  // close per object — not the reference's
                                 // leaked defer-in-loop (sync.go:141-142)
         } catch {
-          case e: java.io.FileNotFoundException =>
-            Receipt(t.name, dstBucket, 0L, t.content_type, "failed_get",
-                    String.valueOf(e.getMessage))
           case e: Exception =>
-            Receipt(t.name, dstBucket, 0L, t.content_type, "failed_upload",
+            Receipt(t.name, dstBucket, 0L, t.content_type,
+                    if (opened) "failed_upload" else "failed_get",
                     String.valueOf(e.getMessage))
         }
       }

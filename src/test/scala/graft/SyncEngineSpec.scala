@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -24,6 +25,19 @@ class SyncEngineSpec extends AnyFunSuite {
     providers = Seq(ProviderConf("local", "file", s"file://$root")),
     mappings = Seq(MappingConf("local", "src", "local", "dst")),
     ledgerPath = s"$root/ledger")
+
+  /** Runs `body` on its own thread and fails if it takes longer than
+    * `seconds`: a cycle that waits forever — on a peer's lock, or on an
+    * observation that is never delivered — fails here instead of hanging
+    * the suite.
+    */
+  private def within[A](seconds: Long)(body: => A): A = {
+    val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
+    try pool.submit(new java.util.concurrent.Callable[A] {
+      def call(): A = body
+    }).get(seconds, java.util.concurrent.TimeUnit.SECONDS)
+    finally pool.shutdownNow()
+  }
 
   /** Two mappings `src{1,2}` → `dst{1,2}` sharing one ledger under `root`. */
   private def mkConfig2(root: Path): SyncConfig = SyncConfig(
@@ -932,22 +946,32 @@ class SyncEngineSpec extends AnyFunSuite {
     assert(calls.size == 1, "tagger fired on an all-skip cycle")
   }
 
-  test("taggableReceipts drops failed copies — only physically written " +
-       "objects reach the tagger") {
-    import spark.implicits._
-    import java.sql.Timestamp
-    val t1 = Timestamp.valueOf("2025-01-01 00:00:00")
-    val toCopy = Seq(
-      ("ok.txt", 4L, "text/plain", t1, "e1", Map("k" -> "v")),
-      ("ghost.txt", 9L, "app/x", t1, "e2", Map("g" -> "w"))
-    ).toDF("name", "size", "content_type", "last_modified", "etag",
-           "metadata")
-    val receipts = Seq(("ok.txt", "success"), ("ghost.txt", "failed_get"))
-      .toDF("object_name", "sync_status")
-    val got = SyncEngine.taggableReceipts(toCopy, receipts)
-      .as[(String, String, Map[String, String])].collect()
-    assert(got.sameElements(
-      Array(("ok.txt", "text/plain", Map("k" -> "v")))))
+  test("a target-side copy error is an upload failure, and the tagger " +
+       "sees only the successful copies") {
+    import org.apache.spark.sql.DataFrame
+    val root = Files.createTempDirectory("graft-sync-upfail")
+    write(root.resolve("src/a.txt"), "aaa")
+    write(root.resolve("src/b.txt"), "bbb")
+    // a non-empty directory where b.txt must land: the source opens, the
+    // target's create fails (FileNotFoundException "Is a directory")
+    write(root.resolve("dst/b.txt/x"), "x")
+    val cfg = mkConfig(root)
+    val tagged = scala.collection.mutable.ArrayBuffer.empty[String]
+    val recorder = new graft.sources.PostCopyTagger {
+      override def tag(mappingId: String, targetUri: String,
+                       frame: DataFrame): Unit =
+        tagged ++= frame.select("object_name").collect().map(_.getString(0))
+    }
+    val engine = new SyncEngine(spark, cfg, recorder)
+    val r = within(60)(engine.syncAll())
+    // b.txt/x is an orphan of the target, deleted after the copy ran
+    assert(r == Seq(engine.MappingReport(cfg.mappings.head.mappingId,
+      synced = 1, skipped = 0, failed = 1, orphansRemoved = 1)), s"$r")
+    val status = SyncEngine.readLedger(spark, cfg.ledgerPath)
+      .select("object_name", "sync_status").collect()
+      .map(row => row.getString(0) -> row.getString(1)).toMap
+    assert(status == Map("a.txt" -> "success", "b.txt" -> "failed_upload"))
+    assert(tagged.toSeq == Seq("a.txt"))
   }
 
   test("a throwing tagger cannot wedge sync progress: copies commit to " +
@@ -1053,5 +1077,179 @@ class SyncEngineSpec extends AnyFunSuite {
     }
     expectOneChangeOneOrphan("a", "d", skipped = 2)(engine.syncAll())
     expectOneChangeOneOrphan("b", "c", skipped = 1)(engine.syncAll(2))
+  }
+
+  test("one mapping's stalled partition swap cannot stall another " +
+       "mapping's cycle") {
+    val root = Files.createTempDirectory("graft-sync-peerswap")
+    for (m <- 1 to 2; f <- Seq("a", "b"))
+      write(root.resolve(s"src$m/$f.txt"), s"$m-$f")
+    val cfg = mkConfig2(root)
+    val seeded = new SyncEngine(spark, cfg).syncAll()
+    assert(seeded.forall(r => r.synced == 2 && r.failed == 0), s"$seeded")
+    // mapping B's committer died between its two swap renames: its
+    // complete partition sits in .old, mapping_id=B is absent, and its
+    // partition lock is fresh — proof of life for 600 s
+    val Seq(a, b) = cfg.mappings
+    val ledger = Paths.get(cfg.ledgerPath)
+    val esc = SyncEngine.escapeMappingId(b.mappingId)
+    Files.move(ledger.resolve(s"mapping_id=$esc"),
+               ledger.resolve(s".old_mapping_id=$esc"))
+    val lock = Paths.get(cfg.ledgerPath +
+      SyncEngine.partitionLockSuffix(b.mappingId))
+    Files.write(lock, "live-peer".getBytes("UTF-8"))
+    def staging(): Set[(String, Long, Long)] = {
+      val walk = Files.walk(ledger.resolve(s".old_mapping_id=$esc"))
+      try walk.iterator().asScala.toSet.map((p: Path) =>
+        (p.getFileName.toString, Files.size(p),
+         Files.getLastModifiedTime(p).toMillis))
+      finally walk.close()
+    } + (("lock", Files.size(lock), Files.getLastModifiedTime(lock).toMillis))
+    val before = staging()
+
+    // mapping A alone: one changed object and one orphan, so it commits
+    write(root.resolve("src1/a.txt"), "1-a-v2")
+    Files.delete(root.resolve("src1/b.txt"))
+    val engineA = new SyncEngine(spark, cfg.copy(mappings = Seq(a)))
+    val r = within(60)(engineA.syncAll())
+    assert(r == Seq(engineA.MappingReport(a.mappingId, synced = 1,
+      skipped = 0, failed = 0, orphansRemoved = 1)), s"$r")
+    assert(new String(Files.readAllBytes(root.resolve("dst1/a.txt"))) ==
+      "1-a-v2")
+    assert(staging() == before, "A's cycle touched B's crash staging")
+    assert(!Files.exists(ledger.resolve(s"mapping_id=$esc")))
+  }
+
+  /** Spark jobs of the warm one-mapping cycle below (one rewritten object,
+    * one orphan): 2 for the diff barrier (its ledger-side broadcast build
+    * and the barrier), 1 for the copy barrier, 2 for the delete barrier
+    * (its broadcast build and the barrier) and 8 for the ledger commit
+    * (the partition write plus the broadcast builds and adaptive query
+    * stages of its merge). The cycle's counts ride on the three barriers
+    * and cost none.
+    */
+  private val WarmCycleJobBudget = 13
+
+  test("a warm one-mapping cycle stays within its Spark-job budget") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val root = Files.createTempDirectory("graft-sync-jobs")
+    for (f <- 1 to 6) write(root.resolve(s"src/f$f.txt"), s"f$f")
+    val cfg = mkConfig(root)
+    val engine = new SyncEngine(spark, cfg)
+    engine.syncAll()
+    engine.syncAll() // warm-up: all skip
+    write(root.resolve("src/f1.txt"), "f1-v2")
+    Files.delete(root.resolve("src/f2.txt"))
+    val sc = spark.sparkContext
+    val group = s"graft-job-budget-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+              .exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    val r =
+      try within(60) {
+        sc.setJobGroup(group, "warm sync cycle", interruptOnCancel = false)
+        engine.syncAll()
+      } finally {
+        org.apache.spark.ListenerBusDrain.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+    assert(r == Seq(engine.MappingReport(cfg.mappings.head.mappingId,
+      synced = 1, skipped = 4, failed = 0, orphansRemoved = 1)), s"$r")
+    assert(jobs.get <= WarmCycleJobBudget,
+      s"a warm cycle ran ${jobs.get} Spark jobs, budget $WarmCycleJobBudget")
+  }
+
+  test("observed counts give exact reports: concurrent mappings, and the " +
+       "persist and checkpoint barriers") {
+    val root = Files.createTempDirectory("graft-sync-observe")
+    val sizes = Map(1 -> 4, 2 -> 7)
+    for ((m, n) <- sizes; f <- 1 to n)
+      write(root.resolve(s"src$m/f$f.txt"), s"$m-$f")
+    val cfg = mkConfig2(root)
+    val engine = new SyncEngine(spark, cfg)
+    val seeded = engine.syncAll()
+    assert(seeded.map(r => r.synced).sorted == Seq(4L, 7L), s"$seeded")
+    // different numbers per mapping, so a count read off the other
+    // mapping's barrier shows up in the report
+    var rewrites = 0
+    def change(m: Int, added: Seq[String], rewritten: Seq[Int],
+               orphaned: Seq[Int]): Unit = {
+      added.foreach(n => write(root.resolve(s"src$m/$n.txt"), s"$m-$n"))
+      // each rewrite is longer than the last, so size and change token move
+      rewritten.foreach { f =>
+        rewrites += 1
+        write(root.resolve(s"src$m/f$f.txt"), s"$m-$f-" + "r" * rewrites)
+      }
+      orphaned.foreach(f => Files.delete(root.resolve(s"src$m/f$f.txt")))
+    }
+    change(1, added = Seq("n1"), rewritten = Seq(1, 2), orphaned = Seq(4))
+    change(2, added = Seq("n1", "n2", "n3"), rewritten = Seq(1),
+           orphaned = Seq(6, 7))
+    val Seq(m1, m2) = cfg.mappings.map(_.mappingId)
+    val rs = within(60)(engine.syncAll(2))
+    assert(rs.toSet == Set(
+      engine.MappingReport(m1, synced = 3, skipped = 1, failed = 0,
+        orphansRemoved = 1),
+      engine.MappingReport(m2, synced = 4, skipped = 4, failed = 0,
+        orphansRemoved = 2)), s"$rs")
+
+    // one mapping under each non-default barrier strategy: one new, one
+    // rewritten and one orphaned object per cycle
+    val one = new SyncEngine(spark, cfg.copy(mappings = cfg.mappings.take(1)))
+    val ckpt = Files.createTempDirectory("graft-sync-observe-ckpt")
+    for ((strategy, i) <- Seq("persist", "checkpoint").zipWithIndex) {
+      if (strategy == "checkpoint")
+        spark.sparkContext.setCheckpointDir(ckpt.toString)
+      spark.conf.set(graft.operators.Barriers.StrategyKey, strategy)
+      try {
+        change(1, added = Seq(s"s$i"), rewritten = Seq(3),
+               orphaned = Seq(Seq(1, 2)(i)))
+        val r = within(60)(one.syncAll())
+        assert(r == Seq(one.MappingReport(m1, synced = 2,
+          skipped = 2, failed = 0, orphansRemoved = 1)),
+          s"$strategy: $r")
+      } finally spark.conf.unset(graft.operators.Barriers.StrategyKey)
+    }
+  }
+
+  test("a cycle over a legacy root-layout ledger skips what it recorded, " +
+       "then leaves the ledger partitioned") {
+    import org.apache.spark.sql.functions._
+    val root = Files.createTempDirectory("graft-sync-legacy")
+    write(root.resolve("src/kept.txt"), "kept")
+    write(root.resolve("src/new.txt"), "new")
+    val cfg = mkConfig(root)
+    val mid = cfg.mappings.head.mappingId
+    // a v3 ledger with its data files at the table root, holding a
+    // success row whose size and change token match kept.txt
+    ObjectStoreCatalog.scanCatalog(spark, cfg.sourceUri(cfg.mappings.head))
+      .filter(col("name") === "kept.txt")
+      .select(lit(0L).as("id"), lit(mid).as("mapping_id"),
+        col("name").as("object_name"), col("size"), col("last_modified"),
+        col("etag"), col("content_type"),
+        current_timestamp().as("last_synced"),
+        lit("success").as("sync_status"), col("metadata"))
+      .write.parquet(cfg.ledgerPath)
+    val fs = new org.apache.hadoop.fs.Path(cfg.ledgerPath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val ledgerRoot = new org.apache.hadoop.fs.Path(cfg.ledgerPath)
+    assert(!SyncEngine.partitionedLayout(fs, ledgerRoot))
+
+    val engine = new SyncEngine(spark, cfg)
+    val r = within(60)(engine.syncAll())
+    assert(r == Seq(engine.MappingReport(mid, synced = 1, skipped = 1,
+      failed = 0, orphansRemoved = 0)), s"$r")
+    assert(!Files.exists(root.resolve("dst/kept.txt")),
+      "kept.txt was re-copied although the ledger records it as synced")
+    assert(SyncEngine.partitionedLayout(fs, ledgerRoot))
+    val rows = SyncEngine.readLedgerPartition(spark, cfg.ledgerPath, mid)
+      .select("object_name", "sync_status").collect()
+      .map(row => row.getString(0) -> row.getString(1)).toMap
+    assert(rows == Map("kept.txt" -> "success", "new.txt" -> "success"))
   }
 }
