@@ -177,11 +177,17 @@ class SyncEngine(spark: SparkSession, config: SyncConfig,
 
     // 6c-6d: distributed stream copy. Receipts MUST be materialized before
     // reuse: the executor is side-effecting, and a lazy plan would re-run
-    // the copies once per downstream action.
-    val (receipts, copy) = pin(
-      CopyExecutor.copyObjects(spark, toCopy, srcUri, dstUri).toDF(),
-      Seq(countWhere(col("sync_status") === "success", "copied"),
-          countWhere(col("sync_status") =!= "success", "failed")))
+    // the copies once per downstream action. A diff that observed no
+    // change has nothing to copy, so the cycle runs no copy job and its
+    // receipts are an empty local frame.
+    val (receipts, copy) =
+      if (diff("changed") == 0)
+        (spark.createDataFrame(Seq.empty[CopyExecutor.Receipt]),
+         Map("copied" -> 0L, "failed" -> 0L))
+      else pin(
+        CopyExecutor.copyObjects(spark, toCopy, srcUri, dstUri).toDF(),
+        Seq(countWhere(col("sync_status") === "success", "copied"),
+            countWhere(col("sync_status") =!= "success", "failed")))
 
     // post-copy tagging hook (README "Known limitations" → code): the
     // reference sets Content-Type/user-metadata headers on every PUT;

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,8 +21,23 @@ import java.net.URI
   *    and the run continues (sync.go:136-140,153-158)
   *  - at-least-once + idempotent target keys; run with
   *    spark.speculation=false (SURVEY.md §7.4)
+  *
+  * Copies write the target like the reference does, bytes only: on
+  * `file://` they go through the raw local filesystem (see
+  * [[unchecksummed]]), so no CRC is computed and no `.crc` sidecar is left
+  * beside an object. Source reads, deletes and compaction keep the
+  * checksummed filesystem.
   */
 object CopyExecutor {
+
+  /** The filesystem an object write goes through: Hadoop's checksummed
+    * `LocalFileSystem` (`file://`) gives its raw filesystem, any other
+    * filesystem is returned as is (object stores write no sidecars).
+    */
+  private def unchecksummed(fs: FileSystem): FileSystem = fs match {
+    case local: LocalFileSystem => local.getRawFileSystem
+    case other => other
+  }
 
   case class CopyTask(name: String, size: Long, content_type: String)
   case class Receipt(object_name: String, bucket: String, size: Long,
@@ -44,6 +59,7 @@ object CopyExecutor {
       val conf = taskConf.value
       val srcFs = FileSystem.get(URI.create(srcBucket), conf)
       val dstFs = FileSystem.get(URI.create(dstBucket), conf)
+      val outFs = unchecksummed(dstFs)
       val buf = new Array[Byte](1 << 20)
       it.map { t =>
         val src = new Path(srcBucket + "/" + t.name)
@@ -56,8 +72,16 @@ object CopyExecutor {
           val in = srcFs.open(src)
           opened = true
           try {
-            dstFs.mkdirs(dst.getParent)
-            val out = dstFs.create(dst, true)
+            outFs.mkdirs(dst.getParent)
+            // a target written through the checksummed filesystem holds a
+            // sidecar that would no longer match the new bytes, and a later
+            // checksummed read would throw ChecksumException
+            dstFs match {
+              case local: LocalFileSystem =>
+                outFs.delete(local.getChecksumFile(dst), false)
+              case _ =>
+            }
+            val out = outFs.create(dst, true)
             try {
               var n = in.read(buf)
               var total = 0L

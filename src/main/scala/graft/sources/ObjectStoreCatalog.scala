@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, LocalFileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -56,14 +56,16 @@ object ObjectStoreCatalog {
     java.lang.Long.toHexString(size * 1000003L ^ mtimeMs)
 
   /** Driver-side recursive listing → catalog DataFrame. Fine up to ~1e5
-    * objects; beyond that use [[scanCatalogDistributed]]. The rows are on
-    * the driver, so the frame carries their size as its estimate, where an
-    * RDD-backed frame would otherwise count as unboundedly large: joins
-    * against a catalog, and against barriers derived from one, broadcast.
+    * objects; beyond that use [[scanCatalogDistributed]]. The listing is
+    * [[listPrefix]]'s: a directory walk on `file://`, one flat paged LIST
+    * on an object store. The rows are on the driver, so the frame carries
+    * their size as its estimate, where an RDD-backed frame would otherwise
+    * count as unboundedly large: joins against a catalog, and against
+    * barriers derived from one, broadcast.
     */
   def scanCatalog(spark: SparkSession, bucketUri: String): DataFrame = {
     val rows = listPrefix(new Configuration(spark.sparkContext.hadoopConfiguration),
-                          bucketUri, "")
+                          bucketUri, bucketUri)
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows.toSeq, 1), CatalogSchema)
     graft.operators.Barriers.withSizeEstimate(df, rows.length,
@@ -139,7 +141,7 @@ object ObjectStoreCatalog {
       .parallelize(recursiveItems, math.max(1, math.min(parallelism, math.max(1, recursiveItems.length))))
       .mapPartitions { it =>
         val c = taskConf.value
-        it.flatMap(p => listPrefix(c, p, prefixOf(bucketUri, p)))
+        it.flatMap(p => listPrefix(c, bucketUri, p))
       }
     val shallowRdd = sc
       .parallelize(shallowItems, math.max(1, math.min(parallelism, math.max(1, shallowItems.length))))
@@ -147,18 +149,12 @@ object ObjectStoreCatalog {
         val c = taskConf.value
         it.flatMap { p =>
           val tfs = FileSystem.get(URI.create(p), c)
-          val pfx = prefixOf(bucketUri, p)
           tfs.listStatus(new Path(p)).iterator.filterNot(_.isDirectory)
-            .map(st => toRow(bucketUri, pfx + st.getPath.getName, st))
+            .map(st => toRow(bucketUri, relName(bucketUri, st.getPath), st))
         }
       }
     spark.createDataFrame(
       recRdd ++ shallowRdd ++ sc.parallelize(topRows.toSeq, 1), CatalogSchema)
-  }
-
-  private def prefixOf(bucketUri: String, dirUri: String): String = {
-    val rel = relName(bucketUri, new Path(dirUri))
-    if (rel.isEmpty) "" else rel + "/"
   }
 
   private def relName(bucketUri: String, p: Path): String = {
@@ -166,35 +162,46 @@ object ObjectStoreCatalog {
     p.toUri.getPath.stripPrefix(base).stripPrefix("/")
   }
 
-  private def metadataOf(st: org.apache.hadoop.fs.FileStatus): Map[String, String] =
+  private def metadataOf(st: FileStatus): Map[String, String] =
     Map("mtime_ms" -> st.getModificationTime.toString)
 
   private def toRow(bucketUri: String, name: String,
-                    st: org.apache.hadoop.fs.FileStatus): Row =
+                    st: FileStatus): Row =
     Row(name, bucketUri, st.getLen, contentTypeOf(name),
         new java.sql.Timestamp(st.getModificationTime),
         pseudoEtag(st.getLen, st.getModificationTime), metadataOf(st))
 
-  /** Recursive paged listing under one prefix (mirrors the reference's
-    * iterator/paged listings, e.g. aws/client.go:77-88).
+  /** Recursive listing of every object under `prefixUri`, as catalog rows
+    * of `bucketUri` (mirrors the reference's iterator/paged listings, e.g.
+    * aws/client.go:77-88).
+    *
+    * On `file://` (Hadoop's `LocalFileSystem`) it walks the tree with
+    * `listStatus`, which hides `.crc` sidecars with the same filter as
+    * `listFiles` and never loads a file's permissions. `listFiles` wraps
+    * every status in a `LocatedFileStatus`, and without the native Hadoop
+    * library its permission load forks a shell command per file (about
+    * 3 ms per object; the walk costs tens of µs, see SCALE.md). Every
+    * other filesystem keeps `listFiles(root, true)`, which on s3a/gs/abfs
+    * is one flat, paged LIST where a walk would cost one LIST per prefix.
     */
-  private def listPrefix(conf: Configuration, uri: String,
-                         namePrefix: String): ArrayBuffer[Row] = {
-    val fs = FileSystem.get(URI.create(uri), conf)
-    val root = new Path(uri)
+  private def listPrefix(conf: Configuration, bucketUri: String,
+                         prefixUri: String): ArrayBuffer[Row] = {
+    val fs = FileSystem.get(URI.create(prefixUri), conf)
+    val root = new Path(prefixUri)
     val out = ArrayBuffer.empty[Row]
     if (!fs.exists(root)) return out  // bucket_exists_guard: empty, not error
-    val it = fs.listFiles(root, true)
-    val base = root.toUri.getPath.stripSuffix("/")
-    while (it.hasNext) {
-      val st = it.next()
-      val rel = st.getPath.toUri.getPath.stripPrefix(base).stripPrefix("/")
-      val name = namePrefix + rel
-      out += Row(name, uri.toString, st.getLen,
-                 contentTypeOf(rel),
-                 new java.sql.Timestamp(st.getModificationTime),
-                 pseudoEtag(st.getLen, st.getModificationTime),
-                 metadataOf(st))
+    def emit(st: FileStatus): Unit =
+      out += toRow(bucketUri, relName(bucketUri, st.getPath), st)
+    fs match {
+      case local: LocalFileSystem =>
+        // depth-first in listing order, the order listFiles returns
+        def walk(dir: Path): Unit = local.listStatus(dir).foreach { st =>
+          if (st.isDirectory) walk(st.getPath) else emit(st)
+        }
+        walk(root)
+      case _ =>
+        val it = fs.listFiles(root, true)
+        while (it.hasNext) emit(it.next())
     }
     out
   }

@@ -418,6 +418,100 @@ class SyncEngineSpec extends AnyFunSuite {
     assert(driver == dist && driver.size == 4)
   }
 
+  test("file:// catalog walk lists what listFiles lists") {
+    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+    val root = Files.createTempDirectory("graft-walk")
+    write(root.resolve("b/top.txt"), "t")
+    write(root.resolve("b/d1/a.json"), "{}")
+    write(root.resolve("b/d1/e/f/b.csv"), "b,c")
+    write(root.resolve("b/d2/c"), "no extension")
+    Files.createDirectories(root.resolve("b/empty/nested"))
+    val uri = s"file://$root/b"
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = FileSystem.get(java.net.URI.create(uri), conf)
+    // a Hadoop-written object: its `.crc` sidecar is not an object
+    val out = fs.create(new HPath(s"$uri/d1/hadoop.bin"), true)
+    try out.write(Array.fill[Byte](3000)(7)) finally out.close()
+    assert(Files.exists(root.resolve("b/d1/.hadoop.bin.crc")))
+
+    val base = new HPath(uri).toUri.getPath
+    val expected = {
+      val it = fs.listFiles(new HPath(uri), true)
+      val b = Seq.newBuilder[Seq[Any]]
+      while (it.hasNext) {
+        val st = it.next()
+        val name = st.getPath.toUri.getPath.stripPrefix(base).stripPrefix("/")
+        b += Seq(name, st.getLen,
+                 new java.sql.Timestamp(st.getModificationTime),
+                 ObjectStoreCatalog.pseudoEtag(st.getLen, st.getModificationTime),
+                 ObjectStoreCatalog.contentTypeOf(name), uri)
+      }
+      b.result()
+    }
+    assert(expected.map(_.head).toSet == Set("top.txt", "d1/a.json",
+      "d1/e/f/b.csv", "d1/hadoop.bin", "d2/c"))
+    val walked = ObjectStoreCatalog.scanCatalog(spark, uri)
+      .select("name", "size", "last_modified", "etag", "content_type", "bucket")
+      .collect().map(_.toSeq).toSeq
+    assert(walked == expected)
+    // the distributed listing labels every row with the bucket too
+    val dist = ObjectStoreCatalog.scanCatalogDistributed(spark, uri)
+      .select("name", "size", "last_modified", "etag", "content_type", "bucket")
+      .collect().map(_.toSeq).toSet
+    assert(dist == expected.toSet)
+
+    val missing = s"file://$root/nope"
+    assert(!fs.exists(new HPath(missing)))
+    assert(ObjectStoreCatalog.scanCatalog(spark, missing).count() == 0)
+  }
+
+  test("a target written with checksum sidecars syncs to exactly the " +
+       "source's objects, and stays readable through checksums") {
+    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+    val root = Files.createTempDirectory("graft-sync-sidecars")
+    write(root.resolve("src/a.txt"), "a-v1")
+    write(root.resolve("src/sub/b.txt"), "b-v1")
+    write(root.resolve("src/gone.txt"), "gone")
+    val cfg = mkConfig(root)
+    val engine = new SyncEngine(spark, cfg)
+    assert(engine.syncAll().head.synced == 3)
+    // the target as a checksummed LocalFileSystem write leaves it: every
+    // object with a `.crc` sidecar beside it
+    val local = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val dst = root.resolve("dst")
+    for (n <- Seq("a.txt", "sub/b.txt", "gone.txt")) {
+      val bytes = Files.readAllBytes(dst.resolve(n))
+      val out = local.create(new HPath(dst.resolve(n).toString), true)
+      try out.write(bytes) finally out.close()
+      assert(Files.exists(dst.resolve(n).resolveSibling(
+        s".${dst.resolve(n).getFileName}.crc")))
+    }
+    def allFiles(dir: Path): Set[String] = {
+      val walk = Files.walk(dir)
+      try walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => dir.relativize(p).toString).toSet
+      finally walk.close()
+    }
+
+    // every surviving object is rewritten (longer bodies, so size and
+    // etag move whatever the mtime granularity), one is deleted, one added
+    write(root.resolve("src/a.txt"), "a-version-2")
+    write(root.resolve("src/sub/b.txt"), "b-version-2")
+    write(root.resolve("src/new.txt"), "new")
+    Files.delete(root.resolve("src/gone.txt"))
+    val r = within(60)(engine.syncAll())
+    assert(r == Seq(engine.MappingReport(cfg.mappings.head.mappingId,
+      synced = 3, skipped = 0, failed = 0, orphansRemoved = 1)), s"$r")
+    assert(allFiles(dst) == allFiles(root.resolve("src")),
+      s"target files: ${allFiles(dst)}")
+    for (n <- allFiles(dst)) {
+      val in = local.open(new HPath(dst.resolve(n).toString))
+      val got = try in.readAllBytes() finally in.close()
+      assert(new String(got, "UTF-8") ==
+        new String(Files.readAllBytes(root.resolve("src").resolve(n)), "UTF-8"))
+    }
+  }
+
   test("config parse, validation matrix, and save-default round-trip") {
     val good = SyncConfig.parse(
       """{"providers":[{"id":"a","type":"file","uri":"file:///tmp/x"}],
@@ -1130,16 +1224,17 @@ class SyncEngineSpec extends AnyFunSuite {
     */
   private val WarmCycleJobBudget = 13
 
-  test("a warm one-mapping cycle stays within its Spark-job budget") {
+  /** Spark jobs of an all-skip cycle: the diff barrier's 2 and the delete
+    * barrier's 2. A diff that observed no change runs no copy job, and
+    * the cycle commits nothing.
+    */
+  private val AllSkipCycleJobBudget = 4
+
+  /** Runs `body` under its own job group, under a deadline, and returns
+    * its result with the number of Spark jobs it started.
+    */
+  private def withJobCount[A](body: => A): (A, Int) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val root = Files.createTempDirectory("graft-sync-jobs")
-    for (f <- 1 to 6) write(root.resolve(s"src/f$f.txt"), s"f$f")
-    val cfg = mkConfig(root)
-    val engine = new SyncEngine(spark, cfg)
-    engine.syncAll()
-    engine.syncAll() // warm-up: all skip
-    write(root.resolve("src/f1.txt"), "f1-v2")
-    Files.delete(root.resolve("src/f2.txt"))
     val sc = spark.sparkContext
     val group = s"graft-job-budget-${java.util.UUID.randomUUID()}"
     val jobs = new java.util.concurrent.atomic.AtomicInteger
@@ -1152,16 +1247,54 @@ class SyncEngineSpec extends AnyFunSuite {
     sc.addSparkListener(listener)
     val r =
       try within(60) {
-        sc.setJobGroup(group, "warm sync cycle", interruptOnCancel = false)
-        engine.syncAll()
+        sc.setJobGroup(group, "sync cycle", interruptOnCancel = false)
+        body
       } finally {
         org.apache.spark.ListenerBusDrain.drain(sc)
         sc.removeSparkListener(listener)
       }
+    (r, jobs.get)
+  }
+
+  test("a warm one-mapping cycle stays within its Spark-job budget") {
+    val root = Files.createTempDirectory("graft-sync-jobs")
+    for (f <- 1 to 6) write(root.resolve(s"src/f$f.txt"), s"f$f")
+    val cfg = mkConfig(root)
+    val engine = new SyncEngine(spark, cfg)
+    engine.syncAll()
+    engine.syncAll() // warm-up: all skip
+    write(root.resolve("src/f1.txt"), "f1-v2")
+    Files.delete(root.resolve("src/f2.txt"))
+    val (r, jobs) = withJobCount(engine.syncAll())
     assert(r == Seq(engine.MappingReport(cfg.mappings.head.mappingId,
       synced = 1, skipped = 4, failed = 0, orphansRemoved = 1)), s"$r")
-    assert(jobs.get <= WarmCycleJobBudget,
-      s"a warm cycle ran ${jobs.get} Spark jobs, budget $WarmCycleJobBudget")
+    assert(jobs <= WarmCycleJobBudget,
+      s"a warm cycle ran $jobs Spark jobs, budget $WarmCycleJobBudget")
+  }
+
+  test("an all-skip cycle runs no copy job") {
+    val root = Files.createTempDirectory("graft-sync-jobs-idle")
+    for (f <- 1 to 6) write(root.resolve(s"src/f$f.txt"), s"f$f")
+    val cfg = mkConfig(root)
+    val engine = new SyncEngine(spark, cfg)
+    engine.syncAll()
+    engine.syncAll() // warm-up: all skip
+    val (r, jobs) = withJobCount(engine.syncAll())
+    assert(r == Seq(engine.MappingReport(cfg.mappings.head.mappingId,
+      synced = 0, skipped = 6, failed = 0, orphansRemoved = 0)), s"$r")
+    assert(jobs <= AllSkipCycleJobBudget,
+      s"an all-skip cycle ran $jobs Spark jobs, budget $AllSkipCycleJobBudget")
+    // a delete-only cycle also copies nothing, and still commits the
+    // removed orphan's ledger row away
+    Files.delete(root.resolve("src/f6.txt"))
+    val r2 = within(60)(engine.syncAll())
+    assert(r2 == Seq(engine.MappingReport(cfg.mappings.head.mappingId,
+      synced = 0, skipped = 5, failed = 0, orphansRemoved = 1)), s"$r2")
+    assert(!Files.exists(root.resolve("dst/f6.txt")))
+    val names = SyncEngine.readLedgerPartition(spark, cfg.ledgerPath,
+      cfg.mappings.head.mappingId).select("object_name").collect()
+      .map(_.getString(0)).toSet
+    assert(names == (1 to 5).map(f => s"f$f.txt").toSet, s"$names")
   }
 
   test("observed counts give exact reports: concurrent mappings, and the " +
