@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -12,8 +12,8 @@ import graft.sources.ObjectStoreCatalog
   * LoadConfig → NewDB → NewFactory → NewSynchronizer → SyncAll), re-expressed
   * as one logical plan per mapping (SURVEY.md §3.1):
   *
-  *   scan(src) ⟕ ledger → filter(needs_sync) → copy(foreachPartition)
-  *   → receipts → ledger latest-wins merge;
+  *   scan(src) ⟕ ledger → filter(needs_sync) → copy(mapPartitions)
+  *   → ledger rows → ledger upsert;
   *   scan(tgt) ▷ scan(src) → delete → ledger delete
   *
   * The SQLite ledger becomes a parquet state table partitioned by
@@ -129,21 +129,24 @@ class SyncEngine(spark: SparkSession, config: SyncConfig,
     }
 
   /** SyncBuckets (sync.go:56-176) as a relational plan + two executors.
-    * The cycle's three eager barriers (diff, copy receipts, delete
-    * receipts) carry its counters as `Dataset.observe` metrics, and live
-    * only for this cycle — the next one re-scans — so they are released,
-    * newest first, once the ledger commit and orphan delete are done.
+    * The cycle's three eager barriers (diff, copied ledger rows, delete
+    * receipts) carry its counters and row counts as `Dataset.observe`
+    * metrics, and live only for this cycle — the next one re-scans — so
+    * they are released, newest first, once the ledger commit and orphan
+    * delete are done.
     */
   private def syncMapping(m: MappingConf): MappingReport = {
     val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     // each barrier's counts ride on its own job; `Observation.get` blocks
-    // until that action has delivered them
+    // until that action has delivered them. Its row count is its size
+    // estimate, so the planner broadcasts a small barrier.
     def pin(df: DataFrame, counts: Seq[Column]): (DataFrame, Map[String, Long]) = {
       val o = new Observation()
-      val b = Barriers.materialize(df.observe(o, counts.head, counts.tail: _*),
-                                   eager = true)
+      val b = Barriers.materialize(
+        df.observe(o, count(lit(1)).as("rows"), counts: _*), eager = true)
       pinned += b
-      (b, o.get.map { case (k, v) => k -> v.asInstanceOf[Long] })
+      val n = o.get.map { case (k, v) => k -> v.asInstanceOf[Long] }
+      (Barriers.withSizeEstimate(b, n("rows"), df.schema.defaultSize), n)
     }
     try cycle(m, pin)
     finally pinned.reverseIterator.foreach(Barriers.release)
@@ -175,34 +178,36 @@ class SyncEngine(spark: SparkSession, config: SyncConfig,
           countWhere(col("action") === "skip", "skipped")))
     val toCopy = SyncOps.needsSync(decided)
 
-    // 6c-6d: distributed stream copy. Receipts MUST be materialized before
-    // reuse: the executor is side-effecting, and a lazy plan would re-run
-    // the copies once per downstream action. A diff that observed no
-    // change has nothing to copy, so the cycle runs no copy job and its
-    // receipts are an empty local frame.
-    val (receipts, copy) =
+    // 6c-6e: distributed stream copy (sync.go:134-196). Each task row keeps
+    // its catalog columns, so the copy barrier IS the ledger batch and
+    // nothing joins it back; it is eager because the executor is
+    // side-effecting and a lazy plan would re-copy per downstream action.
+    // A diff that observed no change runs no copy job: the batch is empty.
+    val (updates, copy) =
       if (diff("changed") == 0)
-        (spark.createDataFrame(Seq.empty[CopyExecutor.Receipt]),
+        (spark.createDataFrame(spark.sparkContext.emptyRDD[Row], LedgerSchema),
          Map("copied" -> 0L, "failed" -> 0L))
-      else pin(
-        CopyExecutor.copyObjects(spark, toCopy, srcUri, dstUri).toDF(),
-        Seq(countWhere(col("sync_status") === "success", "copied"),
-            countWhere(col("sync_status") =!= "success", "failed")))
+      else {
+        val (copied, counts) = pin(
+          CopyExecutor.copyRows(spark, toCopy, srcUri, dstUri),
+          Seq(countWhere(col("sync_status") === "success", "copied"),
+              countWhere(col("sync_status") =!= "success", "failed")))
+        (copied.select(lit(0L).as("id"), lit(mid).as("mapping_id"),
+          col("name").as("object_name"), col("size"), col("last_modified"),
+          col("etag"), col("content_type"),
+          current_timestamp().as("last_synced"), col("sync_status"),
+          col("metadata")), counts)
+      }
 
     // post-copy tagging hook (README "Known limitations" → code): the
-    // reference sets Content-Type/user-metadata headers on every PUT;
-    // the Hadoop-FS copy path cannot, so a deployment-supplied tagger
-    // gets the success receipts joined back to the catalog's header
-    // columns — one row per object PHYSICALLY written. The frame is lazy
-    // over the pinned barriers (no copy re-runs), and a cycle that copied
-    // nothing never calls the tagger.
+    // reference sets Content-Type/user-metadata headers on every PUT; the
+    // Hadoop-FS copy path cannot, so a deployment-supplied tagger gets the
+    // batch's success rows, one per object PHYSICALLY written, lazy over
+    // the copy barrier. A cycle that copied nothing never calls it.
     var tagFailed = 0L
     if (copy("copied") > 0) {
-      val tagged = toCopy.alias("t")
-        .join(receipts.filter(col("sync_status") === "success").alias("r"),
-              col("t.name") === col("r.object_name"))
-        .select(col("t.name").as("object_name"),
-                col("t.content_type"), col("t.metadata"))
+      val tagged = updates.filter(col("sync_status") === "success")
+        .select(col("object_name"), col("content_type"), col("metadata"))
       try tagger.tag(mid, dstUri, tagged)
       catch {
         // tagger failure is NOT a cycle failure: the objects ARE copied
@@ -220,22 +225,6 @@ class SyncEngine(spark: SparkSession, config: SyncConfig,
       }
     }
 
-    // 6e: ledger upsert from receipts (sync.go:179-196) — receipt status
-    // joined back to source metadata, then latest-wins merge
-    val updates = toCopy.alias("t")
-      .join(receipts.alias("r"), col("t.name") === col("r.object_name"))
-      .select(
-        lit(0L).as("id"),
-        lit(mid).as("mapping_id"),
-        col("t.name").as("object_name"),
-        col("t.size"),
-        col("t.last_modified"),
-        col("t.etag"),
-        col("t.content_type"),
-        current_timestamp().as("last_synced"),
-        col("r.sync_status"),
-        col("t.metadata"))
-
     // 8: orphans — delete from target, then from ledger (sync.go:199-234);
     // failed deletes keep their ledger rows (sync.go:217-221)
     val orphans = SyncOps.orphanAntiJoin(tgtCatalog, srcCatalog)
@@ -244,19 +233,15 @@ class SyncEngine(spark: SparkSession, config: SyncConfig,
       Seq(countWhere(col("removed"), "removed")))
 
     // ledger COMMIT: reference ON-CONFLICT upsert semantics — the batch's
-    // rows win unconditionally (anti-join+union, no window sort over the
-    // ledger) — then the keyed delete of successfully-removed orphans.
-    // PARTITION-SCOPED (r13 verdict item 2): the ledger is partitioned by
-    // mapping_id and every mapping owns exactly one partition, so the
-    // commit reads, merges, and atomically swaps ONLY
-    // `mapping_id=<mid>/` under a lock keyed to that partition. At a
-    // 100 M-object fleet this makes the commit O(|this mapping|) I/O —
-    // the reference's per-row SQLite upsert cost model
-    // (internal/database/database.go:346-364) — and commits of DIFFERENT
-    // mappings no longer serialize at all; only two drivers syncing the
-    // SAME mapping contend. updates/doomed reference only the cycle's
-    // barriers, so the in-lock work is the cheap per-partition merge,
-    // never the copies or the cycle's ledger read.
+    // rows win unconditionally (anti-join+union, no window sort) — then
+    // the keyed delete of successfully-removed orphans. It reads, merges
+    // and atomically swaps ONLY this mapping's `mapping_id=<mid>/`
+    // partition, under a lock keyed to it: O(|this mapping|) I/O, the
+    // reference's per-row SQLite upsert cost model
+    // (internal/database/database.go:346-364), and only two drivers
+    // syncing the SAME mapping contend. updates/doomed project the copy
+    // and delete barriers, which broadcast, so the in-lock work scans the
+    // partition straight into its write: no ledger shuffle, no copy re-run.
     val doomed = deleteReceipts.filter(col("removed"))
       .select(lit(mid).as("mapping_id"), col("object_name"))
     def commitLedger(): Unit = {
@@ -270,10 +255,8 @@ class SyncEngine(spark: SparkSession, config: SyncConfig,
       // partition can be live — immediate roll-forward/back is safe.
       val base = SyncEngine.readLedgerPartition(spark, config.ledgerPath,
         mid, callerHoldsPartitionLock = true)
-      val merged = SyncOps.ledgerUpsert(base, updates)
-      val afterDelete = merged.join(doomed, Seq("mapping_id", "object_name"),
-                                    "left_anti")
-      SyncEngine.writeLedgerPartition(spark, afterDelete,
+      SyncEngine.writeLedgerPartition(spark, SyncOps.ledgerUpsert(base, updates)
+        .join(doomed, Seq("mapping_id", "object_name"), "left_anti"),
         config.ledgerPath, mid)
     }
     // an all-skip cycle has nothing to commit — skipping the write keeps
@@ -788,8 +771,7 @@ object SyncEngine {
       val (migrated, _) = LedgerMigrations.migrate(stored)
       migrated.select(LedgerSchema.fieldNames.toIndexedSeq.map(org.apache.spark.sql.functions.col): _*)
     } else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                            LedgerSchema)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], LedgerSchema)
   }
 
   /** Atomic-enough rewrite: write to `<path>.tmp`, then swap. (Delta MERGE
@@ -903,8 +885,7 @@ object SyncEngine {
         .select(LedgerSchema.fieldNames.toIndexedSeq.map(n =>
           if (n == "mapping_id") lit(mid).as(n) else col(n)): _*)
     else
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], LedgerSchema)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], LedgerSchema)
   }
 
   /** Partition-scoped commit write: stage ONE mapping's merged rows in a

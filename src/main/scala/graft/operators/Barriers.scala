@@ -32,11 +32,12 @@ import org.apache.spark.storage.StorageLevel
   * cluster by flipping one conf.
   *
   * The sync cycle (`SyncEngine`) relies on an eager barrier to run each
-  * copy and each delete once: its receipts are read by the tagger and
-  * the ledger commit, and a lazy plan would repeat the side effects per
-  * action. Its counts are `Dataset.observe` metrics on each barrier's
-  * input, delivered by the eager action under every strategy (the
-  * `persist` branch's `count` included). Under `persist` a lost block
+  * copy and each delete once: the copied ledger rows are read by the
+  * tagger and the ledger commit, and a lazy plan would repeat the side
+  * effects per action. Its counts and row counts are `Dataset.observe`
+  * metrics on each barrier's input, delivered by the eager action under
+  * every strategy (the `persist` branch's `count` included); a row count
+  * is its barrier's [[withSizeEstimate]]. Under `persist` a lost block
   * recomputes from lineage and so re-runs those copies or deletes; the
   * copy executor's at-least-once, idempotent-target contract already
   * allows that.

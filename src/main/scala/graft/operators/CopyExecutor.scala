@@ -1,11 +1,13 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType}
 
 import graft.sources.TaskConf
 
+import java.io.{InputStream, OutputStream}
 import java.net.URI
 
 /** Side-effecting executors: distributed object copy and delete over any
@@ -39,31 +41,45 @@ object CopyExecutor {
     case other => other
   }
 
-  case class CopyTask(name: String, size: Long, content_type: String)
-  case class Receipt(object_name: String, bucket: String, size: Long,
-                     content_type: String, sync_status: String,
-                     error: String)
+  /** Streams `in` to `out` through `buf`; returns the bytes written. */
+  private def pump(in: InputStream, out: OutputStream,
+                   buf: Array[Byte]): Long = {
+    var total = 0L
+    var n = in.read(buf)
+    while (n >= 0) {
+      if (n > 0) { out.write(buf, 0, n); total += n }
+      n = in.read(buf)
+    }
+    total
+  }
 
-  /** Copy `tasks` (name/size/content_type rows, e.g. SyncOps.needsSync
-    * output) from srcBucket to dstBucket. Returns one receipt per object —
-    * the UploadInfo analog (provider.go:19-24) plus status for the ledger.
-    */
-  def copyObjects(spark: SparkSession, tasks: DataFrame,
-                  srcBucket: String, dstBucket: String): Dataset[Receipt] = {
-    import spark.implicits._
-    val ts = tasks.select(col("name"), col("size"), col("content_type")).as[CopyTask]
+  case class Receipt(object_name: String, size: Long, content_type: String,
+                     sync_status: String, error: String)
+
+  /** Copy each task row's object `name` from srcBucket to dstBucket and
+    * keep the row: every column of `tasks` plus `bytes_copied`,
+    * `sync_status` and `error` — the UploadInfo analog (provider.go:19-24)
+    * beside the source metadata the ledger records (sync.go:179-196). */
+  def copyRows(spark: SparkSession, tasks: DataFrame,
+               srcBucket: String, dstBucket: String): DataFrame = {
+    val schema = tasks.schema.add("bytes_copied", LongType, nullable = false)
+      .add("sync_status", StringType, nullable = false)
+      .add("error", StringType, nullable = false)
+    val nameAt = tasks.schema.fieldIndex("name")
     // Session conf rides the closure so task-side FileSystems see the
     // ProviderFactory endpoints/credentials (not just core-site defaults).
     val taskConf = TaskConf(spark)
-    ts.mapPartitions { it =>
+    tasks.mapPartitions { (it: Iterator[Row]) =>
       val conf = taskConf.value
       val srcFs = FileSystem.get(URI.create(srcBucket), conf)
       val dstFs = FileSystem.get(URI.create(dstBucket), conf)
       val outFs = unchecksummed(dstFs)
       val buf = new Array[Byte](1 << 20)
       it.map { t =>
-        val src = new Path(srcBucket + "/" + t.name)
-        val dst = new Path(dstBucket + "/" + t.name)
+        def receipt(bytes: Long, status: String, error: String): Row =
+          Row.fromSeq(t.toSeq :+ bytes :+ status :+ error)
+        val src = new Path(srcBucket + "/" + t.getString(nameAt))
+        val dst = new Path(dstBucket + "/" + t.getString(nameAt))
         // failed_get is the source open only (sync.go:136-140); any later
         // error — the target's mkdirs or create, a read or write
         // mid-stream — is an upload failure (sync.go:153-158)
@@ -82,25 +98,29 @@ object CopyExecutor {
               case _ =>
             }
             val out = outFs.create(dst, true)
-            try {
-              var n = in.read(buf)
-              var total = 0L
-              while (n >= 0) {
-                if (n > 0) { out.write(buf, 0, n); total += n }
-                n = in.read(buf)
-              }
-              Receipt(t.name, dstBucket, total, t.content_type, "success", "")
-            } finally out.close()
+            try receipt(pump(in, out, buf), "success", "")
+            finally out.close()
           } finally in.close()  // close per object — not the reference's
                                 // leaked defer-in-loop (sync.go:141-142)
         } catch {
           case e: Exception =>
-            Receipt(t.name, dstBucket, 0L, t.content_type,
-                    if (opened) "failed_upload" else "failed_get",
+            receipt(0L, if (opened) "failed_upload" else "failed_get",
                     String.valueOf(e.getMessage))
         }
       }
-    }
+    }(Encoders.row(schema))
+  }
+
+  /** [[copyRows]] of `tasks`' name/size/content_type as one receipt per
+    * object: its name, bytes written, content type and status. */
+  def copyObjects(spark: SparkSession, tasks: DataFrame,
+                  srcBucket: String, dstBucket: String): Dataset[Receipt] = {
+    import spark.implicits._
+    copyRows(spark, tasks.select(col("name"), col("size"), col("content_type")),
+             srcBucket, dstBucket)
+      .select(col("name").as("object_name"), col("bytes_copied").as("size"),
+              col("content_type"), col("sync_status"), col("error"))
+      .as[Receipt]
   }
 
   case class CompactionBin(target_name: String, members: Seq[String])
@@ -113,7 +133,7 @@ object CopyExecutor {
     * rewrite a 100-TB catalog full of small sync outputs needs weekly.
     *
     * Each bin is one task row; bytes stream through the same 1 MiB buffer
-    * as [[copyObjects]], never buffering an object — so a bin costs
+    * as [[copyRows]], never buffering an object — so a bin costs
     * O(targetBytes) transfer and O(1) memory regardless of member count.
     * Per-bin error isolation: a failed member read yields a
     * `failed_compact` receipt (the partially-written target is
@@ -141,13 +161,8 @@ object CopyExecutor {
             try {
               bin.members.foreach { m =>
                 val in = srcFs.open(new Path(srcBucket + "/" + m))
-                try {
-                  var n = in.read(buf)
-                  while (n >= 0) {
-                    if (n > 0) { out.write(buf, 0, n); total += n }
-                    n = in.read(buf)
-                  }
-                } finally in.close()
+                try total += pump(in, out, buf)
+                finally in.close()
               }
             } finally out.close()
             CompactReceipt(bin.target_name, bin.members.length.toLong, total,
@@ -161,7 +176,6 @@ object CopyExecutor {
       }
   }
 
-  case class DeleteTask(name: String)
   case class DeleteReceipt(object_name: String, removed: Boolean, error: String)
 
   /** Delete the orphan set from the target bucket (sync.go:199-234).
@@ -175,16 +189,16 @@ object CopyExecutor {
                     dstBucket: String): Dataset[DeleteReceipt] = {
     import spark.implicits._
     val taskConf = TaskConf(spark)
-    orphans.select(col("name")).as[DeleteTask].mapPartitions { it =>
+    orphans.select(col("name")).as[String].mapPartitions { it =>
       val fs = FileSystem.get(URI.create(dstBucket), taskConf.value)
-      it.map { t =>
-        val path = new Path(dstBucket + "/" + t.name)
+      it.map { name =>
+        val path = new Path(dstBucket + "/" + name)
         try {
           val removed = fs.delete(path, false) || !fs.exists(path)
-          DeleteReceipt(t.name, removed, "")
+          DeleteReceipt(name, removed, "")
         } catch {
           case e: Exception =>
-            DeleteReceipt(t.name, removed = false, String.valueOf(e.getMessage))
+            DeleteReceipt(name, removed = false, String.valueOf(e.getMessage))
         }
       }
     }

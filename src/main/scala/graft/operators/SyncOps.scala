@@ -167,10 +167,11 @@ object SyncOps {
     *
     * Same result as [[ledgerLatestWins]] whenever updates are at least as
     * new as current (always true for a sync batch), but a strictly better
-    * plan at scale: no window sort over the whole ledger — the only shuffle
-    * is a keyed anti-join whose update side (one sync batch, tiny relative
-    * to the ledger) broadcasts, leaving the ledger's partition layout
-    * untouched.
+    * plan at scale: no window sort over the whole ledger. The ledger side
+    * is one keyed anti-join against the batch's keys, which broadcast
+    * when the planner knows the batch is small (a sized barrier, as the
+    * sync cycle's copy barrier is), so the ledger streams through
+    * unshuffled; the only aggregate is the batch's own per-key dedup.
     */
   def ledgerUpsert(current: DataFrame, updates: DataFrame): DataFrame = {
     val cols = current.columns
@@ -208,9 +209,9 @@ object SyncOps {
       .select(keys.map(col) ++ cols.filterNot(keys.contains)
         .map(c => col(s"w.$c").as(c)): _*)
       .selectExpr(cols.toIndexedSeq: _*)
+    // an anti-join ignores duplicate keys: the batch's own keys will do
     current
-      .join(latestUpdates.select("mapping_id", "object_name"),
-            Seq("mapping_id", "object_name"), "left_anti")
+      .join(updates.select(keys.map(col): _*), keys, "left_anti")
       .selectExpr(cols.toIndexedSeq: _*)
       .unionByName(latestUpdates)
   }

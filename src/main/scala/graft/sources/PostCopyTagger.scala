@@ -11,13 +11,15 @@ import org.apache.spark.sql.DataFrame
   * concept, so on a real S3/GCS/Azure target a copied object is served
   * with the connector's default MIME type (README "Known limitations").
   * The values themselves are never lost — catalog scan → copy receipt →
-  * ledger — they just are not re-applied to the physical object.
+  * ledger, where the copy's receipt is the catalog row itself plus the
+  * copy's status, and the ledger row a projection of it — they just are
+  * not re-applied to the physical object.
   *
   * This trait is the escape hatch as CODE: a deployment drops in a
   * provider-SDK implementation (e.g. S3 `CopyObject` onto itself with
   * `MetadataDirective=REPLACE`, GCS `Storage.Objects.patch`) without
   * touching engine code. [[graft.SyncEngine]] invokes it once per
-  * mapping cycle, immediately after the copy receipts materialize, with
+  * mapping cycle, immediately after the copy barrier materializes, with
   * exactly the successful copies and the columns a tagging pass needs.
   *
   * Scale contract: `tagged` is a DISTRIBUTED frame (one row per

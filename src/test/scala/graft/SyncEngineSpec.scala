@@ -1217,12 +1217,12 @@ class SyncEngineSpec extends AnyFunSuite {
   /** Spark jobs of the warm one-mapping cycle below (one rewritten object,
     * one orphan): 2 for the diff barrier (its ledger-side broadcast build
     * and the barrier), 1 for the copy barrier, 2 for the delete barrier
-    * (its broadcast build and the barrier) and 8 for the ledger commit
-    * (the partition write plus the broadcast builds and adaptive query
-    * stages of its merge). The cycle's counts ride on the three barriers
-    * and cost none.
+    * (its broadcast build and the barrier) and 4 for the ledger commit
+    * (the batch's dedup shuffle, the broadcasts of the batch's keys and
+    * the removed orphans, and the partition write). The cycle's counts
+    * ride on the three barriers and cost none.
     */
-  private val WarmCycleJobBudget = 13
+  private val WarmCycleJobBudget = 9
 
   /** Spark jobs of an all-skip cycle: the diff barrier's 2 and the delete
     * barrier's 2. A diff that observed no change runs no copy job, and
@@ -1230,19 +1230,37 @@ class SyncEngineSpec extends AnyFunSuite {
     */
   private val AllSkipCycleJobBudget = 4
 
-  /** Runs `body` under its own job group, under a deadline, and returns
-    * its result with the number of Spark jobs it started.
+  /** One Spark job of a budgeted run, as its start event lists it: per
+    * stage, the stage's name and the operation scopes of its RDDs
+    * (`Scan parquet …`, `WholeStageCodegen (1)`, `Exchange`, …), the
+    * scope of the stage's own output RDD last.
     */
-  private def withJobCount[A](body: => A): (A, Int) = {
+  private case class JobTrace(id: Int, stages: Seq[(String, Seq[String])]) {
+    override def toString: String = s"job $id: " + stages.map {
+      case (name, scopes) => s"[$name: ${scopes.mkString(" > ")}]"
+    }.mkString(" ")
+  }
+
+  /** Runs `body` under its own job group, under a deadline, and returns
+    * its result with the Spark jobs it started, in start order.
+    */
+  private def withJobs[A](body: => A): (A, Seq[JobTrace]) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val sc = spark.sparkContext
     val group = s"graft-job-budget-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[JobTrace]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties)
               .exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
+          jobs.add(JobTrace(e.jobId, e.stageInfos.sortBy(_.stageId).map { st =>
+            // the stage's output RDD is the one no other RDD in it reads
+            val read = st.rddInfos.flatMap(_.parentIds).toSet
+            val (out, rest) = st.rddInfos.sortBy(_.id).partition(r => !read(r.id))
+            // each scope once, at its last place: the output's stays last
+            st.name -> (rest ++ out).flatMap(_.scope.map(_.name))
+              .reverse.distinct.reverse
+          }))
     }
     sc.addSparkListener(listener)
     val r =
@@ -1253,8 +1271,16 @@ class SyncEngineSpec extends AnyFunSuite {
         org.apache.spark.ListenerBusDrain.drain(sc)
         sc.removeSparkListener(listener)
       }
-    (r, jobs.get)
+    (r, jobs.asScala.toSeq)
   }
+
+  /** True for a stage that scans a parquet table (the ledger: the cycle
+    * reads no other parquet) straight into a shuffle: its output RDD is
+    * an `Exchange`'s.
+    */
+  private def shufflesLedgerScan(scopes: Seq[String]): Boolean =
+    scopes.exists(_.startsWith("Scan parquet")) &&
+      scopes.lastOption.exists(_.startsWith("Exchange"))
 
   test("a warm one-mapping cycle stays within its Spark-job budget") {
     val root = Files.createTempDirectory("graft-sync-jobs")
@@ -1265,11 +1291,16 @@ class SyncEngineSpec extends AnyFunSuite {
     engine.syncAll() // warm-up: all skip
     write(root.resolve("src/f1.txt"), "f1-v2")
     Files.delete(root.resolve("src/f2.txt"))
-    val (r, jobs) = withJobCount(engine.syncAll())
+    val (r, jobs) = withJobs(engine.syncAll())
     assert(r == Seq(engine.MappingReport(cfg.mappings.head.mappingId,
       synced = 1, skipped = 4, failed = 0, orphansRemoved = 1)), s"$r")
-    assert(jobs <= WarmCycleJobBudget,
-      s"a warm cycle ran $jobs Spark jobs, budget $WarmCycleJobBudget")
+    assert(jobs.size <= WarmCycleJobBudget,
+      s"a warm cycle ran ${jobs.size} Spark jobs, budget " +
+        s"$WarmCycleJobBudget:\n${jobs.mkString("\n")}")
+    // the commit scans the ledger partition straight into its write
+    val shuffled = jobs.filter(_.stages.exists(st => shufflesLedgerScan(st._2)))
+    assert(shuffled.isEmpty,
+      s"a warm cycle shuffled the ledger scan:\n${shuffled.mkString("\n")}")
   }
 
   test("an all-skip cycle runs no copy job") {
@@ -1279,11 +1310,12 @@ class SyncEngineSpec extends AnyFunSuite {
     val engine = new SyncEngine(spark, cfg)
     engine.syncAll()
     engine.syncAll() // warm-up: all skip
-    val (r, jobs) = withJobCount(engine.syncAll())
+    val (r, jobs) = withJobs(engine.syncAll())
     assert(r == Seq(engine.MappingReport(cfg.mappings.head.mappingId,
       synced = 0, skipped = 6, failed = 0, orphansRemoved = 0)), s"$r")
-    assert(jobs <= AllSkipCycleJobBudget,
-      s"an all-skip cycle ran $jobs Spark jobs, budget $AllSkipCycleJobBudget")
+    assert(jobs.size <= AllSkipCycleJobBudget,
+      s"an all-skip cycle ran ${jobs.size} Spark jobs, budget " +
+        s"$AllSkipCycleJobBudget:\n${jobs.mkString("\n")}")
     // a delete-only cycle also copies nothing, and still commits the
     // removed orphan's ledger row away
     Files.delete(root.resolve("src/f6.txt"))
@@ -1295,6 +1327,52 @@ class SyncEngineSpec extends AnyFunSuite {
       cfg.mappings.head.mappingId).select("object_name").collect()
       .map(_.getString(0)).toSet
     assert(names == (1 to 5).map(f => s"f$f.txt").toSet, s"$names")
+  }
+
+  test("each changed object is copied exactly once per cycle, under " +
+       "every barrier strategy, with the tagger on") {
+    import org.apache.spark.sql.DataFrame
+    import graft.operators.Barriers
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.graftcount.impl", classOf[CreateCountingFs].getName)
+    val ckpt = Files.createTempDirectory("graft-sync-once-ckpt")
+    for (strategy <- Seq("localCheckpoint", "persist", "checkpoint")) {
+      val root = Files.createTempDirectory(s"graft-sync-once-$strategy")
+      for (f <- 1 to 5) write(root.resolve(s"src/f$f.txt"), s"f$f")
+      // the target goes through the counting scheme, the source does not
+      val cfg = SyncConfig(
+        providers = Seq(ProviderConf("local", "file", s"file://$root"),
+                        ProviderConf("counted", "file", s"graftcount://$root")),
+        mappings = Seq(MappingConf("local", "src", "counted", "dst")),
+        ledgerPath = s"$root/ledger")
+      val tagged = scala.collection.mutable.ArrayBuffer.empty[String]
+      val tagger = new graft.sources.PostCopyTagger {
+        override def tag(mappingId: String, targetUri: String,
+                         frame: DataFrame): Unit =
+          tagged ++= frame.select("object_name").collect().map(_.getString(0))
+      }
+      val engine = new SyncEngine(spark, cfg, tagger)
+      // creates per object name under this run's target, then reset
+      def cycle(changed: Set[String]): Unit = {
+        tagged.clear()
+        CreateCountingFs.drain(s"$root/dst/")
+        val r = within(60)(engine.syncAll())
+        assert(r.map(_.synced) == Seq(changed.size.toLong), s"$strategy: $r")
+        val creates = CreateCountingFs.drain(s"$root/dst/")
+        assert(creates == changed.map(_ -> 1).toMap, s"$strategy: $creates")
+        assert(tagged.sorted == changed.toSeq.sorted, s"$strategy: $tagged")
+      }
+      if (strategy == "checkpoint")
+        spark.sparkContext.setCheckpointDir(ckpt.toString)
+      spark.conf.set(Barriers.StrategyKey, strategy)
+      try {
+        cycle((1 to 5).map(f => s"f$f.txt").toSet)
+        write(root.resolve("src/f1.txt"), "f1-rewritten")
+        write(root.resolve("src/f6.txt"), "f6")
+        cycle(Set("f1.txt", "f6.txt"))
+        cycle(Set.empty)
+      } finally spark.conf.unset(Barriers.StrategyKey)
+    }
   }
 
   test("observed counts give exact reports: concurrent mappings, and the " +
@@ -1384,5 +1462,43 @@ class SyncEngineSpec extends AnyFunSuite {
       .select("object_name", "sync_status").collect()
       .map(row => row.getString(0) -> row.getString(1)).toMap
     assert(rows == Map("kept.txt" -> "success", "new.txt" -> "success"))
+  }
+}
+
+/** The local filesystem under the `graftcount` scheme, counting the
+  * `create` calls per path (a copy is one `create` of its target).
+  */
+class CreateCountingFs extends GraftTestFs {
+  import org.apache.hadoop.fs.{FSDataOutputStream, Path}
+  import org.apache.hadoop.fs.permission.FsPermission
+  import org.apache.hadoop.util.Progressable
+  override def getScheme: String = "graftcount"
+  override def getUri: java.net.URI = java.net.URI.create("graftcount:///")
+  override def create(f: Path, overwrite: Boolean, bufferSize: Int,
+                      replication: Short, blockSize: Long,
+                      progress: Progressable): FSDataOutputStream = {
+    CreateCountingFs.count(f)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+                      bufferSize: Int, replication: Short, blockSize: Long,
+                      progress: Progressable): FSDataOutputStream = {
+    CreateCountingFs.count(f)
+    super.create(f, permission, overwrite, bufferSize, replication,
+                 blockSize, progress)
+  }
+}
+
+object CreateCountingFs {
+  private val creates =
+    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+  private def count(f: org.apache.hadoop.fs.Path): Unit =
+    creates.merge(f.toUri.getPath, 1, (a: Integer, b: Integer) => a + b)
+
+  /** Removes and returns the counts of the paths under `dir`, keyed by
+    * the path relative to it. */
+  def drain(dir: String): Map[String, Int] = {
+    val under = creates.keySet.asScala.filter(_.startsWith(dir)).toSeq
+    under.map(p => p.stripPrefix(dir) -> creates.remove(p).intValue).toMap
   }
 }
