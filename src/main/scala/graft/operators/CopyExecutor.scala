@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType}
@@ -9,6 +10,9 @@ import graft.sources.TaskConf
 
 import java.io.{InputStream, OutputStream}
 import java.net.URI
+import java.nio.channels.FileChannel
+import java.nio.file.{Files, StandardOpenOption}
+import java.nio.file.attribute.PosixFilePermissions
 
 /** Side-effecting executors: distributed object copy and delete over any
   * Hadoop FileSystem. Replaces the reference's sequential per-object loop
@@ -24,11 +28,28 @@ import java.net.URI
   *  - at-least-once + idempotent target keys; run with
   *    spark.speculation=false (SURVEY.md §7.4)
   *
-  * Copies write the target like the reference does, bytes only: on
-  * `file://` they go through the raw local filesystem (see
-  * [[unchecksummed]]), so no CRC is computed and no `.crc` sidecar is left
-  * beside an object. Source reads, deletes and compaction keep the
-  * checksummed filesystem.
+  * Copies write the target like the reference does, bytes only: no CRC is
+  * computed and no `.crc` sidecar is left beside an object. Each object
+  * takes one of two paths ([[transfer]]):
+  *  - `file://` to `file://`, from a source with no `.crc` sidecar: the
+  *    kernel copies the bytes (`FileChannel.transferTo`, `sendfile` on
+  *    Linux) into the target opened in place, without truncation; the
+  *    target is then cut to the bytes written and given the mode a raw
+  *    local `create` would give it, in one `chmod` call. Rewriting in
+  *    place keeps the target's blocks, where an `O_TRUNC` open frees and
+  *    reallocates them, and nothing forks a shell.
+  *  - every other pair (object stores, a mixed pair) and every source with
+  *    a sidecar: a stream through a 1 MiB buffer into a `create` of the
+  *    target on the [[unchecksummed]] filesystem. The source is read
+  *    through its own filesystem, so a `file://` source's sidecar is
+  *    verified and a mismatch fails the object.
+  *
+  * Neither path is atomic. A copy cut off mid-way leaves the target
+  * truncated to a prefix of the new bytes on the stream path, and the new
+  * prefix over the old tail on the kernel path. Either way the object is
+  * not `success` in the ledger (its receipt failed, or the cycle never
+  * committed), so the next cycle copies it again. Source reads, deletes
+  * and compaction keep the checksummed filesystem.
   */
 object CopyExecutor {
 
@@ -53,13 +74,77 @@ object CopyExecutor {
     total
   }
 
+  /** A source open that failed: the object's `failed_get`. */
+  private final case class SourceOpenFailed(cause: Exception)
+      extends Exception(cause)
+
+  /** Copies `src` to `dst` and returns the bytes written; a failed source
+    * open throws [[SourceOpenFailed]], any later error is thrown as is.
+    * The kernel path when both filesystems are `file://` and the source
+    * has no sidecar to verify, the stream path otherwise (see
+    * [[CopyExecutor]]).
+    */
+  private def transfer(srcFs: FileSystem, dstFs: FileSystem,
+                       src: Path, dst: Path, buf: Array[Byte]): Long = {
+    def open[A](f: => A): A =
+      try f catch { case e: Exception => throw SourceOpenFailed(e) }
+    val outFs = unchecksummed(dstFs)
+    // the target's directory, and no sidecar beside it: a target written
+    // through the checksummed filesystem holds one that would no longer
+    // match the new bytes, and a later checksummed read would throw
+    // ChecksumException
+    def prepareTarget(): Unit = {
+      outFs.mkdirs(dst.getParent)
+      dstFs match {
+        case local: LocalFileSystem =>
+          outFs.delete(local.getChecksumFile(dst), false)
+        case _ =>
+      }
+    }
+    (srcFs, dstFs) match {
+      case (srcLocal: LocalFileSystem, dstLocal: LocalFileSystem)
+          if !srcLocal.pathToFile(srcLocal.getChecksumFile(src)).exists() =>
+        val in = open(FileChannel.open(srcLocal.pathToFile(src).toPath,
+                                       StandardOpenOption.READ))
+        try {
+          prepareTarget()
+          val target = dstLocal.pathToFile(dst).toPath
+          val out = FileChannel.open(target, StandardOpenOption.WRITE,
+                                     StandardOpenOption.CREATE)
+          val total = try {
+            var pos = 0L
+            var n = in.transferTo(pos, Long.MaxValue, out)
+            while (n > 0) { pos += n; n = in.transferTo(pos, Long.MaxValue, out) }
+            out.truncate(pos)
+            pos
+          } finally out.close()
+          // the mode RawLocalFileSystem's create sets, read from the same
+          // conf, without its forked `chmod`
+          val mode = FsPermission.getFileDefault
+            .applyUMask(FsPermission.getUMask(outFs.getConf))
+          Files.setPosixFilePermissions(target,
+            PosixFilePermissions.fromString(mode.toString))
+          total
+        } finally in.close()
+      case _ =>
+        val in = open(srcFs.open(src))
+        try {
+          prepareTarget()
+          val out = outFs.create(dst, true)
+          try pump(in, out, buf) finally out.close()
+        } finally in.close()  // close per object — not the reference's
+                              // leaked defer-in-loop (sync.go:141-142)
+    }
+  }
+
   case class Receipt(object_name: String, size: Long, content_type: String,
                      sync_status: String, error: String)
 
   /** Copy each task row's object `name` from srcBucket to dstBucket and
     * keep the row: every column of `tasks` plus `bytes_copied`,
     * `sync_status` and `error` — the UploadInfo analog (provider.go:19-24)
-    * beside the source metadata the ledger records (sync.go:179-196). */
+    * beside the source metadata the ledger records (sync.go:179-196).
+    * `error` is the exception's class and message. */
   def copyRows(spark: SparkSession, tasks: DataFrame,
                srcBucket: String, dstBucket: String): DataFrame = {
     val schema = tasks.schema.add("bytes_copied", LongType, nullable = false)
@@ -73,7 +158,6 @@ object CopyExecutor {
       val conf = taskConf.value
       val srcFs = FileSystem.get(URI.create(srcBucket), conf)
       val dstFs = FileSystem.get(URI.create(dstBucket), conf)
-      val outFs = unchecksummed(dstFs)
       val buf = new Array[Byte](1 << 20)
       it.map { t =>
         def receipt(bytes: Long, status: String, error: String): Row =
@@ -83,29 +167,10 @@ object CopyExecutor {
         // failed_get is the source open only (sync.go:136-140); any later
         // error — the target's mkdirs or create, a read or write
         // mid-stream — is an upload failure (sync.go:153-158)
-        var opened = false
-        try {
-          val in = srcFs.open(src)
-          opened = true
-          try {
-            outFs.mkdirs(dst.getParent)
-            // a target written through the checksummed filesystem holds a
-            // sidecar that would no longer match the new bytes, and a later
-            // checksummed read would throw ChecksumException
-            dstFs match {
-              case local: LocalFileSystem =>
-                outFs.delete(local.getChecksumFile(dst), false)
-              case _ =>
-            }
-            val out = outFs.create(dst, true)
-            try receipt(pump(in, out, buf), "success", "")
-            finally out.close()
-          } finally in.close()  // close per object — not the reference's
-                                // leaked defer-in-loop (sync.go:141-142)
-        } catch {
-          case e: Exception =>
-            receipt(0L, if (opened) "failed_upload" else "failed_get",
-                    String.valueOf(e.getMessage))
+        try receipt(transfer(srcFs, dstFs, src, dst, buf), "success", "")
+        catch {
+          case SourceOpenFailed(e) => receipt(0L, "failed_get", e.toString)
+          case e: Exception => receipt(0L, "failed_upload", e.toString)
         }
       }
     }(Encoders.row(schema))
@@ -132,8 +197,8 @@ object CopyExecutor {
     * emits them name-sorted) into ONE target object, the maintenance
     * rewrite a 100-TB catalog full of small sync outputs needs weekly.
     *
-    * Each bin is one task row; bytes stream through the same 1 MiB buffer
-    * as [[copyRows]], never buffering an object — so a bin costs
+    * Each bin is one task row; bytes stream through a 1 MiB buffer, as on
+    * [[copyRows]]' stream path, never buffering an object — so a bin costs
     * O(targetBytes) transfer and O(1) memory regardless of member count.
     * Per-bin error isolation: a failed member read yields a
     * `failed_compact` receipt (the partially-written target is
@@ -170,7 +235,7 @@ object CopyExecutor {
           } catch {
             case e: Exception =>
               CompactReceipt(bin.target_name, bin.members.length.toLong, 0L,
-                             "failed_compact", String.valueOf(e.getMessage))
+                             "failed_compact", e.toString)
           }
         }
       }
@@ -198,7 +263,7 @@ object CopyExecutor {
           DeleteReceipt(name, removed, "")
         } catch {
           case e: Exception =>
-            DeleteReceipt(name, removed = false, String.valueOf(e.getMessage))
+            DeleteReceipt(name, removed = false, e.toString)
         }
       }
     }

@@ -631,9 +631,149 @@ class SyncEngineSpec extends AnyFunSuite {
       .toDF("name", "size", "content_type")
     val receipts = graft.operators.CopyExecutor
       .copyObjects(spark, tasks, s"file://$root/src", s"file://$root/dst")
-      .collect().map(r => r.object_name -> r.sync_status).toMap
-    assert(receipts("ok.txt") == "success")
-    assert(receipts("ghost.txt") == "failed_get")   // sync.go:136-140
+      .collect().map(r => r.object_name -> r).toMap
+    assert(receipts("ok.txt").sync_status == "success")
+    assert(receipts("ghost.txt").sync_status == "failed_get")   // sync.go:136-140
+    // the error names the exception's class, not only its message (a
+    // NoSuchFileException's message is the bare path)
+    val ghost = receipts("ghost.txt").error
+    assert(ghost.matches("""java\.[\w.]+Exception: .*ghost\.txt.*"""), ghost)
+  }
+
+  /** `n` seeded pseudo-random bytes. */
+  private def bytes(n: Int, seed: Long): Array[Byte] = {
+    val b = new Array[Byte](n)
+    new scala.util.Random(seed).nextBytes(b)
+    b
+  }
+
+  test("a file:// copy rewrites each target to exactly the source's bytes: " +
+       "absent, longer, shorter and sidecar-holding targets, an empty " +
+       "source, a new prefix") {
+    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+    val root = Files.createTempDirectory("graft-copy-inplace")
+    val local = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    // name -> (source length, existing target length, or -1 for none)
+    val cases = Seq(
+      "absent.bin" -> (3000, -1),
+      "longer-target.bin" -> (1000, 70000),  // the rewrite shrinks it
+      "shorter-target.bin" -> (70000, 1000),
+      "empty.bin" -> (0, 4096),
+      "new/nested/prefix.bin" -> (2500, -1),
+      "sidecar.bin" -> (1500, 9000))
+    for (((name, (srcLen, dstLen)), i) <- cases.zipWithIndex) {
+      Files.createDirectories(root.resolve(s"src/$name").getParent)
+      Files.write(root.resolve(s"src/$name"), bytes(srcLen, i))
+      if (dstLen >= 0) {
+        Files.createDirectories(root.resolve(s"dst/$name").getParent)
+        Files.write(root.resolve(s"dst/$name"), bytes(dstLen, 100 + i))
+      }
+    }
+    // a target written through the checksummed filesystem: a `.crc`
+    // sidecar that the new bytes would not match
+    val withCrc = new HPath(root.resolve("dst/sidecar.bin").toString)
+    val out = local.create(withCrc, true)
+    try out.write(bytes(9000, 200)) finally out.close()
+    assert(local.exists(local.getChecksumFile(withCrc)))
+
+    import spark.implicits._
+    val tasks = cases.map { case (n, (len, _)) => (n, len.toLong, "bin") }
+      .toDF("name", "size", "content_type")
+    val receipts = graft.operators.CopyExecutor
+      .copyObjects(spark, tasks, s"file://$root/src", s"file://$root/dst")
+      .collect().map(r => r.object_name -> r).toMap
+    for ((name, (srcLen, _)) <- cases) {
+      val r = receipts(name)
+      assert(r.sync_status == "success" && r.error == "", s"$name: $r")
+      assert(r.size == srcLen.toLong, s"$name: bytes_copied ${r.size}")
+      val got = root.resolve(s"dst/$name")
+      assert(Files.size(got) == srcLen.toLong, s"$name: length")
+      assert(java.util.Arrays.equals(Files.readAllBytes(got),
+        Files.readAllBytes(root.resolve(s"src/$name"))), s"$name: bytes")
+    }
+    assert(!local.exists(local.getChecksumFile(withCrc)))
+    val in = local.open(withCrc)
+    val read = try in.readAllBytes() finally in.close()
+    assert(read.length == 1500)
+  }
+
+  test("a file:// copy gives its target the mode the stream path's create " +
+       "gives, under the conf's umask") {
+    import java.nio.file.attribute.PosixFilePermissions
+    val conf = spark.sparkContext.hadoopConfiguration
+    val scoped = Seq("fs.permissions.umask-mode" -> "077",
+                     // fresh filesystems read the umask from this conf
+                     "fs.file.impl.disable.cache" -> "true",
+                     "fs.graftcount.impl.disable.cache" -> "true")
+    conf.set("fs.graftcount.impl", classOf[CreateCountingFs].getName)
+    val root = Files.createTempDirectory("graft-copy-mode")
+    write(root.resolve("src/m.txt"), "mode")
+    // the kernel path rewrites an existing target, which must still get
+    // the mode, as the stream path's create sets it on every write
+    write(root.resolve("kernel/m.txt"), "older bytes")
+    Files.setPosixFilePermissions(root.resolve("kernel/m.txt"),
+      PosixFilePermissions.fromString("rw-r--r--"))
+    import spark.implicits._
+    val tasks = Seq(("m.txt", 4L, "text/plain")).toDF("name", "size", "content_type")
+    scoped.foreach { case (k, v) => conf.set(k, v) }
+    try {
+      for (dst <- Seq(s"file://$root/kernel", s"graftcount://$root/stream")) {
+        val r = graft.operators.CopyExecutor
+          .copyObjects(spark, tasks, s"file://$root/src", dst).collect()
+        assert(r.map(_.sync_status).toSeq == Seq("success"), r.mkString)
+      }
+    } finally scoped.foreach { case (k, _) => conf.unset(k) }
+    // the stream path is the one that went through a create
+    assert(CreateCountingFs.drain(s"$root/") == Map("stream/m.txt" -> 1))
+    def mode(dir: String): String = PosixFilePermissions.toString(
+      Files.getPosixFilePermissions(root.resolve(s"$dir/m.txt")))
+    assert(mode("stream") == "rw-------")
+    assert(mode("kernel") == mode("stream"))
+    assert(new String(Files.readAllBytes(root.resolve("kernel/m.txt"))) == "mode")
+  }
+
+  test("a source whose sidecar does not match its bytes is never recorded " +
+       "success, and the cycle after it is fixed converges") {
+    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+    val root = Files.createTempDirectory("graft-sync-srccrc")
+    val local = FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    // sources written through the checksummed filesystem carry sidecars
+    def checksummed(name: String, body: Array[Byte]): Unit = {
+      val out = local.create(new HPath(root.resolve(s"src/$name").toString), true)
+      try out.write(body) finally out.close()
+    }
+    checksummed("good.bin", bytes(5000, 1))
+    checksummed("bad.bin", bytes(5000, 2))
+    write(root.resolve("src/plain.txt"), "no sidecar")
+    // same length, other bytes: the sidecar no longer matches
+    Files.write(root.resolve("src/bad.bin"), bytes(5000, 3))
+    val cfg = mkConfig(root)
+    val engine = new SyncEngine(spark, cfg)
+    val mid = cfg.mappings.head.mappingId
+    def statuses(): Map[String, String] =
+      SyncEngine.readLedgerPartition(spark, cfg.ledgerPath, mid)
+        .select("object_name", "sync_status").collect()
+        .map(row => row.getString(0) -> row.getString(1)).toMap
+    def sameBytes(name: String): Boolean = java.util.Arrays.equals(
+      Files.readAllBytes(root.resolve(s"dst/$name")),
+      Files.readAllBytes(root.resolve(s"src/$name")))
+
+    val r1 = within(60)(engine.syncAll())
+    assert(r1 == Seq(engine.MappingReport(mid, synced = 2, skipped = 0,
+      failed = 1, orphansRemoved = 0)), s"$r1")
+    val s1 = statuses()
+    assert(s1("good.bin") == "success" && s1("plain.txt") == "success", s"$s1")
+    assert(s1("bad.bin") != "success", s"$s1")
+    assert(sameBytes("good.bin") && sameBytes("plain.txt"))
+
+    // the source is fixed: its bytes match a fresh sidecar again
+    checksummed("bad.bin", bytes(6000, 4))
+    val r2 = within(60)(engine.syncAll())
+    assert(r2 == Seq(engine.MappingReport(mid, synced = 1, skipped = 2,
+      failed = 0, orphansRemoved = 0)), s"$r2")
+    assert(statuses() == Map("good.bin" -> "success", "bad.bin" -> "success",
+                             "plain.txt" -> "success"))
+    assert(Seq("good.bin", "bad.bin", "plain.txt").forall(sameBytes))
   }
 
   test("partition-scoped commit rewrites ONLY the touched mapping's partition") {
