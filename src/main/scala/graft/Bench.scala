@@ -178,10 +178,6 @@ object Bench {
     // adjudicating individual regressions without paying the full surface.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // SPARK_GRAFT_PURGE=0 disables the between-query cache purge, to A/B
-    // whether purge teardown (localCheckpoint block eviction) is what a
-    // suspect query is actually paying for.
-    val purge = !sys.env.get("SPARK_GRAFT_PURGE").contains("0")
     // The measured pass does NOT swallow errors: a broken query must bench
     // as an error, not as a fast "success" (a prior round timed an instant
     // AnalysisException as a 0.2s win). Each query reports either its
@@ -219,12 +215,15 @@ object Bench {
     }
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
+    // the profile reads each rep's tag off the events: nothing waits in a rep
+    val profile = Profile.attach(spark)
     // one measurement = median-of-reps, stopping at the first failing rep
     // (re-running a broken, possibly slow-to-fail query buys nothing) —
     // shared by the main pass and the self-healing retries so the two
-    // measure identically.
-    def runQuery(fn: (SparkSession, String) =>
-        org.apache.spark.sql.DataFrame): Either[String, Double] = {
+    // measure identically. Also returns the rep whose time it reports
+    // (the failing one on error).
+    def runQuery(name: String, fn: (SparkSession, String) =>
+        org.apache.spark.sql.DataFrame): (Either[String, Double], Int) = {
       var err = Option.empty[String]
       val times = scala.collection.mutable.ArrayBuffer.empty[Double]
       var r = 0
@@ -232,8 +231,9 @@ object Bench {
         val t0 = System.nanoTime()
         // noop sink forces full computation of every column (count() would
         // let Catalyst prune projections and undercount the real work)
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case t: Throwable =>
+        try Profile.tagged(spark, s"$name#$r") {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        } catch { case t: Throwable =>
           err = Some(s"${t.getClass.getSimpleName}: " +
             Option(t.getMessage).getOrElse("").take(120)) }
         times += (System.nanoTime() - t0) / 1e9
@@ -248,16 +248,14 @@ object Bench {
       // fresh JVM) bench the accumulated pressure, not their plan. Safe
       // here: queries run sequentially and nothing memoizes frames across
       // queries (the cross-query caches are all file-staged).
-      if (purge) {
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(graft.operators.Barriers.quietUnpersist)
-        spark.sharedState.cacheManager.clearCache()
-      }
+      spark.sparkContext.getPersistentRDDs.values
+        .foreach(graft.operators.Barriers.quietUnpersist)
+      spark.sharedState.cacheManager.clearCache()
       err match {
-        case Some(e) => Left(e)
+        case Some(e) => (Left(e), r - 1)
         case None =>
-          val sorted = times.sorted
-          Right(sorted(sorted.length / 2))
+          val (t, rep) = times.zipWithIndex.sortBy(_._1).apply(times.length / 2)
+          (Right(t), rep)
       }
     }
 
@@ -368,10 +366,7 @@ object Bench {
     // retry (tmp + atomic rename), so a timeout-killed invocation still
     // leaves the last complete state on disk — the r18 driver run lost its
     // whole artifact because the single write sat at the end of main().
-    // quotes/backslashes AND all control/non-ASCII bytes must go, or an
-    // exception message breaks the one-line JSON contract
-    def jstr(s: String) =
-      "\"" + s.replaceAll("[\"\\\\]|[^\\x20-\\x7e]", " ") + "\""
+    def jstr(s: String) = Profile.jsonString(s)
     def j3(d: Double) =
       String.format(java.util.Locale.ROOT, "%.3f", java.lang.Double.valueOf(d))
     val defaultOut =
@@ -379,6 +374,7 @@ object Bench {
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", defaultOut)
     val mainResults =
       scala.collection.mutable.ArrayBuffer.empty[(String, Either[String, Double])]
+    val reportedReps = scala.collection.mutable.ArrayBuffer.empty[Int]
     var anchor = 0.0
 
     def buildLine(partial: Boolean): String = {
@@ -459,6 +455,26 @@ object Bench {
         } catch { case t: Throwable =>
           System.err.println(s"[bench] could not write $outPath: ${t.getMessage}") }
 
+    // The sidecar `<outPath minus .json>.profile.json`: one row per
+    // measured query, from the rep the main pass reports, written outside
+    // any timed region. The heal pass is not profiled.
+    def writeProfile(): Unit = {
+      if (outPath.nonEmpty) try {
+        Profile.drain(spark)
+        val rows = mainResults.zip(reportedReps).map { case ((name, res), rep) =>
+          val wall = res.fold(e => s""""error":${jstr(e)}""", t => s""""wall_s":${j3(t)}""")
+          s"""{"query":${jstr(name)},"rep":$rep,$wall,""" +
+            profile.stats(s"$name#$rep").jsonFields + "}"
+        }
+        java.nio.file.Files.write(
+          java.nio.file.Paths.get(outPath.stripSuffix(".json") + ".profile.json"),
+          rows.mkString(s"""{"sf":${jstr(sfDir)},"reps":$reps,"rows":[\n""",
+            ",\n", "\n]}\n").getBytes("UTF-8"))
+      } catch { case t: Throwable =>
+        System.err.println(s"[bench] could not write the profile: ${t.getMessage}") }
+      Profile.detach(spark, profile)
+    }
+
     // ---- main measured pass ---------------------------------------------
     selected.zipWithIndex.foreach { case ((name, fn), qi) =>
       // no reading before query 0: even after adaptive warmup the very
@@ -472,7 +488,9 @@ object Bench {
         sentinelAt += qi
         sentinelSeries += sentinelReading(spark)
       }
-      mainResults += (name -> runQuery(fn))
+      val (res, rep) = runQuery(name, fn)
+      mainResults += (name -> res)
+      reportedReps += rep
       // mid-run snapshots (marked "partial") so even a main-pass kill
       // leaves the measured prefix parseable on disk
       if (qi % 10 == 9) writeArtifact(partial = true)
@@ -482,6 +500,7 @@ object Bench {
       sentinelAt += selected.length
       sentinelSeries += sentinelReading(spark)
     }
+    writeProfile()
 
     // ---- self-healing pass ------------------------------------------------
     val mainWindows = if (sentinelSeries.isEmpty) Seq.fill(selected.length)(0.0)
@@ -538,7 +557,7 @@ object Bench {
             if (healElapsed >= healBudget) budgetSpent = true
             else {
               val before = sentinelReading(spark)
-              val res = runQuery(st.fn)
+              val res = runQuery(name, st.fn)._1
               val after = sentinelReading(spark)
               healSeries += before; healSeries += after
               val w = math.max(before, after)

@@ -1764,7 +1764,7 @@ object SparkEntry {
       // leakage quarantine → shard assignment → the per-(split, shard)
       // release manifest. Every stage IS the verified standalone
       // operator; text stages run cheapest-first and the embedding pass
-      // touches only their survivors (EXPLAINS.md shows the plan)
+      // touches only their survivors
       val docs = T.documents(s, d)
       graft.operators.CorpusPipeline.prepareRelease(
           docs.filter(col("doc_id") % 11 =!= 0),

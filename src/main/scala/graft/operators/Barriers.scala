@@ -167,34 +167,12 @@ object Barriers {
     rdd.unpersist(blocking = false)
   }
 
-  /** Plan recorder for the EXPLAINS audit (r18 verdict item 6): a
-    * barrier's committed plan shows only `Scan ExistingRDD` downstream —
-    * the stage plans that prove claims like "the embeddings scan joins
-    * only the text-stage survivors" exist solely at materialize time.
-    * When armed (tools.Explains, around each pipeline query), every
-    * [[materialize]] call records its INPUT QueryExecution; the tool
-    * prints them after the query runs, by which point AQE has finalized
-    * each recorded plan (the barrier's action executed it). Never armed
-    * outside the tool, so the query path carries one null-check only.
-    */
-  private val recordedPlans = new java.util.concurrent.atomic.AtomicReference[
-    scala.collection.mutable.ListBuffer[
-      org.apache.spark.sql.execution.QueryExecution]](null)
-  private[graft] def armPlanRecorder(): Unit =
-    recordedPlans.set(scala.collection.mutable.ListBuffer.empty)
-  private[graft] def drainPlanRecorder()
-      : Seq[org.apache.spark.sql.execution.QueryExecution] = {
-    val buf = recordedPlans.getAndSet(null)
-    if (buf == null) Seq.empty else buf.toSeq
-  }
-
   /** Materialize `df` under the session-configured strategy. `eager` forces
     * computation now (iterative loops want this — the round's work must
     * happen before the driver checks convergence); lazy defers to the first
     * action but still computes only once.
     */
   def materialize(df: DataFrame, eager: Boolean = false): DataFrame = {
-    Option(recordedPlans.get()).foreach(_ += df.queryExecution)
     val strategy =
       df.sparkSession.conf.get(StrategyKey, "localCheckpoint")
     strategy match {

@@ -92,7 +92,7 @@ object CorpusOps {
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst")))
-    val symCount = LoopProbe.timed("cc", 0, "edges") { symRaw.count() }
+    val symCount = symRaw.count()
     val sym = Barriers.withSizeEstimate(symRaw, symCount, 32)
     // Round 1 runs SPECIALIZED (r19 optimization, kept): the label table
     // is the identity at entry, so the dst-label lookup join degenerates
@@ -126,9 +126,7 @@ object CorpusOps {
       val m = rows.map(r => r.getString(0) -> r.getLong(1)).toMap
       (m(tagA), m("b"))
     }
-    val (nNodes, e1Count) = LoopProbe.timed("cc", 1, "round") {
-      twoCounts("l", l1Raw, e1Raw)
-    }
+    val (nNodes, e1Count) = twoCounts("l", l1Raw, e1Raw)
     var labels = Barriers.withSizeEstimate(l1Raw, nNodes, 32)
     var e = Barriers.withSizeEstimate(e1Raw, e1Count, 32)
     var eCount = e1Count
@@ -169,9 +167,7 @@ object CorpusOps {
         .distinct())
       // one action per round: materializes m, the new labels and the new
       // edge graph, and returns both convergence counts
-      val (nLab, nE) = LoopProbe.timed("cc", iter + 2, "round") {
-        twoCounts("l", nextLabelsRaw, nextERaw)
-      }
+      val (nLab, nE) = twoCounts("l", nextLabelsRaw, nextERaw)
       require(nLab == nNodes) // the left-join rewrite preserves every row
       // the old round's blocks are dead once the new frames are
       // materialized — without this, one copy per round stays pinned

@@ -124,12 +124,11 @@ object CorpusPipeline {
     * Stage ordering is the 100 TB cost argument: text-only stages run
     * cheapest-first, and the EMBEDDING pass (the expensive stage) touches
     * only what survived every text filter — visible in the physical plan
-    * as the embeddings scan joining the filtered survivor set
-    * (EXPLAINS.md). Survivor sets are barriered between stages because
-    * each feeds 2+ consumers (the verdict join and the next stage's
-    * anti-join); everything else is one lazy plan. The final manifest is
-    * |splits|×|shards| rows — the share window runs over ~24 rows, never
-    * the corpus.
+    * as the embeddings scan joining the filtered survivor set. Survivor
+    * sets are barriered between stages because each feeds 2+ consumers
+    * (the verdict join and the next stage's anti-join); everything else
+    * is one lazy plan. The final manifest is |splits|×|shards| rows — the
+    * share window runs over ~24 rows, never the corpus.
     */
   def prepareRelease(docs: DataFrame, embeddings: DataFrame,
                      benchmark: DataFrame, minQuality: Double,

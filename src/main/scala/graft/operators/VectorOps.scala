@@ -640,22 +640,19 @@ object VectorOps {
 
     // barrier per round: the loop would otherwise grow one crossJoin+agg
     // of plan per pass AND recompute every prior pass each action
-    var assigned = LoopProbe.timed("kmeans", 0, "assign0") {
-      Barriers.materialize(assign(cent0), eager = true) }
+    var assigned = Barriers.materialize(assign(cent0), eager = true)
     var itersRun = 0
     var converged = false
     while (itersRun < maxIter && !converged) {
-      val next = LoopProbe.timed("kmeans", itersRun + 1, "refine") {
-        Barriers.materialize(refine(assigned), eager = true) }
+      val next = Barriers.materialize(refine(assigned), eager = true)
       // fixpoint test only when another pass could be skipped; one n-row
       // equi-join + count between two materialized frames
       if (itersRun + 1 < maxIter) {
-        val changed = LoopProbe.timed("kmeans", itersRun + 1, "converge") {
-          next.select(col("vec_id"), col("cluster_id").as("c2"))
-            .join(assigned.select(col("vec_id"), col("cluster_id").as("c1")),
-                  Seq("vec_id"))
-            .filter(col("c1") =!= col("c2"))
-            .count() }
+        val changed = next.select(col("vec_id"), col("cluster_id").as("c2"))
+          .join(assigned.select(col("vec_id"), col("cluster_id").as("c1")),
+                Seq("vec_id"))
+          .filter(col("c1") =!= col("c2"))
+          .count()
         if (changed == 0) converged = true
       }
       Barriers.release(assigned)

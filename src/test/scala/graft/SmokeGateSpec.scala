@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** All-queries smoke gate: every declared driver query must EXECUTE on the
@@ -17,10 +18,32 @@ import org.scalatest.funsuite.AnyFunSuite
   * unhashable driver-side and unorderable in DuckDB (SURVEY §7.4; the
   * `metadata` map is carried in catalog relations only and must be dropped
   * from every parity projection).
+  *
+  * And the exchange budget: each query runs under a [[Profile]] tag and
+  * may plan no more exchanges than its line of `plan_table.tsv` allows
+  * (exchanges are the cost unit a plan regression shows up in first;
+  * counted before adaptive re-planning, which varies from run to run).
+  * A plan that needs more regenerates the table (tools/plan_table.py).
   */
-class SmokeGateSpec extends AnyFunSuite {
+class SmokeGateSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = Spec.spark
   private val sfDir = "/root/testdata/sf0.001"
+  private lazy val profile = Profile.attach(spark)
+  override def beforeAll(): Unit = { super.beforeAll(); profile }
+  override def afterAll(): Unit = {
+    Profile.detach(spark, profile)
+    super.afterAll()
+  }
+
+  /** query -> the exchanges its plan-table line allows */
+  private lazy val exchangeBudget: Map[String, Int] = {
+    val src = scala.io.Source.fromResource("plan_table.tsv")("UTF-8")
+    val lines = try src.getLines().filterNot(_.startsWith("#")).toList
+      finally src.close()
+    val header = lines.head.split("\t")
+    val col = header.indexOf("exchanges")
+    lines.tail.map(_.split("\t")).map(f => f(0) -> f(col).toInt).toMap
+  }
 
   private def containsMap(schema: StructType): Boolean =
     schema.fields.exists { f =>
@@ -35,8 +58,19 @@ class SmokeGateSpec extends AnyFunSuite {
 
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
     test(s"query '$name' executes on sf0.001") {
-      val df = fn(spark, sfDir)
-      df.write.format("noop").mode("overwrite").save()
+      val df = Profile.tagged(spark, name) {
+        val df = fn(spark, sfDir)
+        df.write.format("noop").mode("overwrite").save()
+        df
+      }
+      Profile.drain(spark)
+      val budget = exchangeBudget.getOrElse(name,
+        fail(s"'$name' has no line in plan_table.tsv; regenerate it"))
+      val stats = profile.stats(name)
+      assert(stats.jobs > 0, s"the profile saw no job of '$name'")
+      val planned = stats.plannedExchanges
+      assert(planned <= budget, s"'$name' plans $planned exchanges, its " +
+        s"plan-table line allows $budget — fix the plan or regenerate the table")
       if (SparkEntry.oracleSql.contains(name))
         assert(!containsMap(df.schema),
           s"parity query '$name' exposes a MapType column — the driver " +

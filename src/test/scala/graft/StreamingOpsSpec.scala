@@ -930,4 +930,24 @@ class StreamingOpsSpec extends AnyFunSuite {
       .as[(String, Long)].collect().toMap
     assert(reduced == Map("a" -> 2L, "b" -> 2L, "c" -> 1L, "d" -> 1L))
   }
+
+  test("a replayed foreachBatch append leaves latestPerKey unchanged") {
+    // foreachBatch is at-least-once: a batch replayed after a failure
+    // re-appends its rows with the same batch_id. Here batch 1 (an earlier
+    // batch) and batch 3 (the latest, which decides its keys) land twice.
+    import spark.implicits._
+    val log = Seq(
+      ("a", 1L, 0L), ("b", 1L, 0L),
+      ("b", 2L, 1L), ("c", 1L, 1L),
+      ("a", 3L, 2L),
+      ("c", 4L, 3L), ("d", 1L, 3L)).toDF("token", "freq", "batch_id")
+    val replayed = log.union(log.filter($"batch_id".isin(1L, 3L)))
+    assert(replayed.count() == log.count() + 4)
+    def reduce(df: org.apache.spark.sql.DataFrame) =
+      StreamingOps.latestPerKey(df, Seq("token"))
+        .as[(String, Long)].collect().sorted.toSeq
+    val once = reduce(log)
+    assert(once == Seq("a" -> 3L, "b" -> 2L, "c" -> 4L, "d" -> 1L))
+    assert(reduce(replayed) == once)
+  }
 }
