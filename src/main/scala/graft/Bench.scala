@@ -239,18 +239,13 @@ object Bench {
         times += (System.nanoTime() - t0) / 1e9
         r += 1
       }
-      // cache hygiene between queries: several operators materialize
-      // intermediate frames (Barriers.materialize → localCheckpoint) whose
-      // blocks outlive the query's action — nobody can release them earlier
-      // because the returned plan still reads them. Left in place, ~432
-      // query executions pin block-manager memory for the JVM's lifetime
-      // and late-alphabet queries (dedup_savings, r8: 16.3 s vs 2.7 s in a
+      // cache hygiene between queries: left in place, ~432 query
+      // executions' barrier blocks pin block-manager memory and
+      // late-alphabet queries (dedup_savings, r8: 16.3 s vs 2.7 s in a
       // fresh JVM) bench the accumulated pressure, not their plan. Safe
       // here: queries run sequentially and nothing memoizes frames across
       // queries (the cross-query caches are all file-staged).
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(graft.operators.Barriers.quietUnpersist)
-      spark.sharedState.cacheManager.clearCache()
+      graft.operators.Barriers.purge(spark)
       err match {
         case Some(e) => (Left(e), r - 1)
         case None =>

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.sources.{IoFixtures, ObjectStoreCatalog, SyncRelations => R, Tables => T}
-import graft.operators.{CopyExecutor, EventOps, Multimodal, SyncOps, TextOps, VectorOps}
+import graft.operators.{Barriers, CopyExecutor, EventOps, Multimodal, SyncOps, TextOps, VectorOps}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -721,10 +721,10 @@ object SparkEntry {
       import s.implicits._
       val tasks = Seq(("a.txt", 5L, "text/plain"), ("b/c.json", 2L, "application/json"))
         .toDF("name", "size", "content_type")
-      // localCheckpoint = execute-once barrier: the orderBy's range
-      // partitioner samples its child, which would re-run the side effects
-      CopyExecutor.copyObjects(s, tasks, IoFixtures.uri(src), IoFixtures.uri(dst))
-        .toDF().localCheckpoint(true)
+      // eager barrier = execute-once: the orderBy's range partitioner
+      // samples its child, which would re-run the side effects
+      Barriers.materialize(CopyExecutor.copyObjects(
+          s, tasks, IoFixtures.uri(src), IoFixtures.uri(dst)).toDF(), eager = true)
         .select("object_name", "size", "content_type", "sync_status")
         .orderBy("object_name")
     }),
@@ -735,8 +735,8 @@ object SparkEntry {
       IoFixtures.write(dst, "y.txt", "y")
       import s.implicits._
       val orphans = Seq("x.txt", "y.txt").toDF("name")
-      CopyExecutor.deleteObjects(s, orphans, IoFixtures.uri(dst))
-        .toDF().localCheckpoint(true)
+      Barriers.materialize(CopyExecutor.deleteObjects(
+          s, orphans, IoFixtures.uri(dst)).toDF(), eager = true)
         .select("object_name", "removed").orderBy("object_name")
     }),
 

@@ -24,11 +24,8 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // same per-query cache hygiene as Bench: drop frames a query
-      // materialized but could not release (plan still read them)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(graft.operators.Barriers.quietUnpersist)
-      spark.sharedState.cacheManager.clearCache()
+      // same per-query cache hygiene as Bench
+      graft.operators.Barriers.purge(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

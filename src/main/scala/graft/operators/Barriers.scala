@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** Materialization barriers for multi-consumer and iterative plans.
@@ -27,9 +27,12 @@ import org.apache.spark.storage.StorageLevel
   *    survives executor loss AND cuts lineage. Requires the caller to have
   *    set a checkpoint dir; Spark throws if unset.
   *
-  * Every former `localCheckpoint` call site routes through here, so the
-  * minhash/jaccard/LSH/components pipelines run unchanged on a real
-  * cluster by flipping one conf.
+  * Every barrier in the main sources routes through here — the
+  * minhash/jaccard/LSH/components pipelines, the stream drain's pin and
+  * the side-effect barriers alike — so they all run unchanged on a real
+  * cluster by flipping one conf. `SessionGuardSpec` fails the build on a
+  * raw `localCheckpoint`, `checkpoint`, `persist` or `cache` call
+  * anywhere else.
   *
   * The sync cycle (`SyncEngine`) relies on an eager barrier to run each
   * copy and each delete once: the copied ledger rows are read by the
@@ -156,15 +159,23 @@ object Barriers {
     }
   private[graft] def unpersistNoiseLeaks(): Long = noiseLeaks.get()
 
-  /** Unpersist without the locally-checkpointed WARN — for bulk purge
-    * paths (Bench's between-query cache hygiene, Spec.sweepCaches) that
-    * drop EVERY persistent RDD and can't tell which ones are local
-    * checkpoints (that flag is private[spark]). Same justification as
-    * [[release]]: the blocks are dead by contract at the purge point.
+  /** Drop every persistent RDD and every cached frame of the session —
+    * the per-query cache hygiene of `Bench`, `Verify`, `ScaleRehearsal`
+    * and the specs' `Spec.sweepCaches`. Several operators materialize
+    * frames whose blocks outlive the query's action (the returned plan
+    * still reads them, so nobody can [[release]] them earlier); left in
+    * place they pin block-manager memory for the JVM's lifetime. Only call
+    * between queries, when every frame is dead. Each RDD is unpersisted
+    * without the locally-checkpointed WARN: the purge cannot tell which
+    * RDDs are local checkpoints (that flag is private[spark]), and as in
+    * [[release]] the blocks are dead by contract.
     */
-  private[graft] def quietUnpersist(rdd: org.apache.spark.rdd.RDD[_]): Unit = {
-    muteUnpersistWarn(rdd.getClass.getName)
-    rdd.unpersist(blocking = false)
+  def purge(spark: SparkSession): Unit = {
+    spark.sparkContext.getPersistentRDDs.values.foreach { rdd =>
+      muteUnpersistWarn(rdd.getClass.getName)
+      rdd.unpersist(blocking = false)
+    }
+    spark.sharedState.cacheManager.clearCache()
   }
 
   /** Materialize `df` under the session-configured strategy. `eager` forces

@@ -1,21 +1,25 @@
 package graft.streaming
 
 import java.util.concurrent.atomic.AtomicLong
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.LongType
+import graft.operators.Barriers
 
 /** Structured Streaming operators over the events table: watermarked
   * windowed aggregation and custom-state sessionization
   * (flatMapGroupsWithState) — the streaming generalization of the
   * reference's ticker micro-batch (SURVEY.md §2.10).
   *
-  * Each entry runs the stream synchronously to completion over the parquet
-  * input (memory sink + processAllAvailable) and returns the result as a
-  * static DataFrame, so the same driver harness that checks batch queries
-  * can check streaming ones; results match the batch operators exactly,
-  * which is what the shared DuckDB oracles assert.
+  * Each entry runs its stream synchronously to completion over the parquet
+  * input through the one [[drain]] and returns the result as a static
+  * DataFrame, so the same driver harness that checks batch queries can
+  * check streaming ones; results match the batch operators exactly, which
+  * is what the shared DuckDB oracles assert. The drain's sink is the one
+  * thing that varies: the memory table ([[Memory]]), an Update-mode delta
+  * log ([[DeltaLog]]) or the native parquet file sink ([[ParquetFiles]]).
   */
 object StreamingOps {
 
@@ -157,32 +161,109 @@ object StreamingOps {
   private val RocksDBProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Run the stream to a memory sink and return the drained table.
-    *
-    * `largeState = true` additionally backs the query's state stores with
-    * RocksDB instead of the default in-heap HDFS-backed provider. The
-    * crossover is state VOLUME per store: the in-heap provider re-writes
-    * each store's delta and periodically snapshots its whole map, so
-    * commit cost grows with resident state — for the two queries that
-    * buffer a table-sized state (the stream-stream range join holds both
-    * sides for the full disorder window; the declared as-of join holds
-    * every view/purchase), RocksDB measured 0.55×/0.78× of the in-heap
-    * time at sf0.1 (r11). Small-state streams (windowed counts, content
-    * hashes, interval lists) stay in-heap — RocksDB's JNI round-trips
-    * measured slightly slower there. At deployment scale RocksDB is the
-    * default recommendation regardless (SCALE.md sizing table) because
-    * heap-resident state is the thing that falls over first.
+  /** Where [[drain]] lands a stream's rows: the one thing drains differ in. */
+  private[graft] sealed trait Sink
+
+  /** The harness memory sink, in any output mode. It collects every row
+    * into driver memory, which suits |keys|-sized monitor tables; it
+    * recovers from its checkpoint only in Complete mode.
     */
-  private def runToTable(spark: SparkSession, df: DataFrame,
-                         mode: OutputMode,
-                         largeState: Boolean = false): DataFrame = {
+  private[graft] final case class Memory(mode: OutputMode) extends Sink
+
+  /** Update mode through a `foreachBatch` delta sink: each trigger appends
+    * only its changed rows, stamped with `batch_id`, to `data/` — the
+    * upsert-sink shape, O(changed keys) per trigger. The caller reduces
+    * the log latest-wins per key with [[latestPerKey]].
+    */
+  private[graft] case object DeltaLog extends Sink
+
+  /** Append mode through Spark's native parquet file sink into `data/`:
+    * rows spill to executor-written files as batches commit and the driver
+    * holds nothing — the deployment form for per-PAIR row volumes (through
+    * the memory sink the stream caption gate's ×10 stub-saturation
+    * rehearsal needed 48 g of driver heap for 11.8 M rows). Exactly-once
+    * comes from the sink's `_spark_metadata` commit log.
+    */
+  private[graft] case object ParquetFiles extends Sink
+
+  /** Run the stream to completion into `sink` and return the drained rows
+    * as a static frame, pinned by an eager [[Barriers.materialize]], so the
+    * driver harness that checks batch queries checks streaming ones too.
+    *
+    * The drain works in a fresh `graft_stream_*` scratch base under
+    * `java.io.tmpdir`: `ckpt/` holds the query's checkpoint (every sink's,
+    * the memory sink's included) and `data/` the file-backed sinks' rows.
+    * A file-backed drain that wrote no `.parquet` file (an empty source
+    * fires no trigger) returns an empty frame of the declared schema.
+    *
+    * While the query runs, the session's shuffle partitions are the
+    * stream's ([[streamShufflePartitions]]). `largeState = true` also backs
+    * the state stores with RocksDB instead of the in-heap HDFS-backed
+    * provider. The crossover is state VOLUME per store: the in-heap
+    * provider re-writes each store's delta and periodically snapshots its
+    * whole map, so commit cost grows with resident state — for the two
+    * queries that buffer a table-sized state (the stream-stream range join
+    * holds both sides for the full disorder window; the declared as-of
+    * join holds every view/purchase), RocksDB measured 0.55×/0.78× of the
+    * in-heap time at sf0.1 (r11). Small-state streams stay in-heap, where
+    * RocksDB's JNI round-trips measured slightly slower. At deployment
+    * scale RocksDB is the default recommendation regardless (SCALE.md
+    * sizing table). Conf values are captured when the first batch plans
+    * (and pinned in the checkpoint thereafter), so the session values come
+    * back when the start fails and after the stop; queries run
+    * sequentially here, so the temporary mutation has no observer.
+    *
+    * Scratch lifetime: the base goes as soon as the pinned frame no longer
+    * reads it. `localCheckpoint` and `checkpoint` cut the lineage, so the
+    * base is removed at once. Under `persist` a file-backed result keeps
+    * its lineage to the `data/` files, and a lost or dropped block
+    * recomputes from them; deleting them would turn that recompute into a
+    * missing-file failure. So there the drain removes only `ckpt/` and
+    * leaves `data/` to be deleted when the JVM exits.
+    */
+  private[graft] def drain(spark: SparkSession, df: DataFrame, sink: Sink,
+                           largeState: Boolean = false): DataFrame = {
+    val base = java.nio.file.Files.createTempDirectory(
+      s"graft_stream_${counter.incrementAndGet()}_")
+    val out =
+      try drainAt(spark, df, sink, base, largeState)
+      catch { case t: Throwable => deleteRecursively(base.toFile); throw t }
+    val readsData = out.queryExecution.analyzed.find {
+      case _: org.apache.spark.sql.execution.datasources.LogicalRelation => true
+      case _ => false
+    }.isDefined
+    if (readsData) {
+      deleteRecursively(base.resolve("ckpt").toFile)
+      org.apache.hadoop.fs.FileSystem
+        .getLocal(spark.sparkContext.hadoopConfiguration)
+        .deleteOnExit(new org.apache.hadoop.fs.Path(base.toUri))
+    } else deleteRecursively(base.toFile)
+    out
+  }
+
+  /** [[drain]] in a caller-owned scratch `base`, which it leaves in place:
+    * a second drain of the same plan from the same base restarts from the
+    * checkpoint and appends to the same `data/`.
+    */
+  private[graft] def drainAt(spark: SparkSession, df: DataFrame, sink: Sink,
+                             base: java.nio.file.Path,
+                             largeState: Boolean = false): DataFrame = {
+    val dataDir = base.resolve("data").toString
     val name = s"graft_stream_${counter.incrementAndGet()}"
-    // Conf values are captured when the query's first batch plans (and
-    // pinned in its checkpoint thereafter); restore the session values
-    // only after the drain so the settings cannot leak into batch queries
-    // while staying race-free for this stream. Queries run sequentially in
-    // this harness (Verify/Bench), so the temporary session mutation has
-    // no concurrent observer.
+    val writer = (sink match {
+      case Memory(mode) =>
+        df.writeStream.outputMode(mode).format("memory").queryName(name)
+      case DeltaLog =>
+        df.writeStream.outputMode(OutputMode.Update())
+          .foreachBatch { (batch: DataFrame, batchId: Long) =>
+            // append = the delta log; an empty trigger appends nothing
+            batch.withColumn("batch_id", lit(batchId))
+              .write.mode("append").parquet(dataDir)
+          }
+      case ParquetFiles =>
+        df.writeStream.outputMode(OutputMode.Append())
+          .format("parquet").option("path", dataDir)
+    }).option("checkpointLocation", base.resolve("ckpt").toString)
     val overrides =
       Map("spark.sql.shuffle.partitions" -> streamShufflePartitions(spark)) ++
         (if (largeState) Map(
@@ -195,23 +276,28 @@ object StreamingOps {
           "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" ->
             "true")
         else Map.empty)
-    val saved = overrides.keys
-      .map(k => k -> spark.conf.getOption(k)).toMap
-    def restore(): Unit = saved.foreach {
+    val saved = overrides.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val q = writer.start()
+      try q.processAllAvailable() finally q.stop()
+    } finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None)    => spark.conf.unset(k)
     }
-    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
-    val q =
-      try df.writeStream.outputMode(mode).format("memory")
-        .queryName(name).start()
-      catch { case t: Throwable => restore(); throw t }
-    try q.processAllAvailable()
-    finally { try q.stop() finally restore() }
-    // copy out of the memory sink so the result survives the query stop
-    val out = spark.table(name).localCheckpoint(eager = true)
-    spark.catalog.dropTempView(name)
-    out
+    sink match {
+      case Memory(_) =>
+        try Barriers.materialize(spark.table(name), eager = true)
+        finally spark.catalog.dropTempView(name)
+      case _ =>
+        val hasData = Option(new java.io.File(dataDir).listFiles())
+          .exists(_.exists(f => f.isFile && f.getName.endsWith(".parquet")))
+        if (hasData)
+          Barriers.materialize(spark.read.parquet(dataDir), eager = true)
+        else spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+          if (sink == DeltaLog) df.schema.add("batch_id", LongType)
+          else df.schema)
+    }
   }
 
   /** Watermarked tumbling-window counts; complete mode so the finite input
@@ -225,7 +311,7 @@ object StreamingOps {
       .groupBy(window(col("ts"), duration).as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"),
            sum(col("value").cast("decimal(25,4)")).cast("double").as("sum_value"))
-    runToTable(spark, agg, OutputMode.Complete())
+    drain(spark, agg, Memory(OutputMode.Complete()))
       .select(col("w.start").as("window_start"), col("event_type"),
               col("n"), col("sum_value"))
   }
@@ -249,9 +335,9 @@ object StreamingOps {
     * Shares the batch oracle.
     */
   def qualityClassifierStream(spark: SparkSession, dir: String): DataFrame =
-    runToTable(spark,
+    drain(spark,
       graft.operators.TextOps.qualityClassifier(docsStream(spark, dir)),
-      OutputMode.Append())
+      Memory(OutputMode.Append()))
 
   /** Streaming semantic decontamination: the ingest-time twin of
     * `VectorOps.decontaminateSemantic` — each arriving training vector is
@@ -289,7 +375,7 @@ object StreamingOps {
       .groupBy("vec_id")
       .agg(max(col("sim")).as("max_bench_sim"),
            count(lit(1)).as("n_bench_hits"))
-    runToTable(spark, agg, OutputMode.Complete())
+    drain(spark, agg, Memory(OutputMode.Complete()))
   }
 
   /** Streaming DSIR scoring — the ingest-time twin of
@@ -337,7 +423,7 @@ object StreamingOps {
           .as("weight_fp"))
       .withColumn("w_per_gram_fp", expr("weight_fp div n_grams"))
       .withColumn("target_like", col("weight_fp") > 0)
-    runToTable(spark, scored, OutputMode.Append())
+    drain(spark, scored, Memory(OutputMode.Append()))
   }
 
   /** Sliding (overlapping) watermarked windows — the only structural
@@ -359,7 +445,7 @@ object StreamingOps {
       .agg(count(lit(1)).as("n"),
            sum(col("value").cast("decimal(25,4)")).cast("double")
              .as("sum_value"))
-    runToTable(spark, agg, OutputMode.Complete())
+    drain(spark, agg, Memory(OutputMode.Complete()))
       .select(col("w.start").as("window_start"), col("event_type"),
               col("n"), col("sum_value"))
   }
@@ -370,8 +456,8 @@ object StreamingOps {
     * oracle.
     */
   def jsonPropsAggStream(spark: SparkSession, dir: String): DataFrame =
-    runToTable(spark, jsonPropsAgg(eventsStream(spark, dir)),
-      OutputMode.Complete())
+    drain(spark, jsonPropsAgg(eventsStream(spark, dir)),
+      Memory(OutputMode.Complete()))
 
   /** Per-type JSON rollup aggregate — one definition for the complete-mode
     * monitor and its Update-mode twin (the pair must never drift).
@@ -395,9 +481,9 @@ object StreamingOps {
     */
   def keySkewStream(spark: SparkSession, dir: String, keyCol: String,
                     topK: Int, nFiles: Int = 4): DataFrame =
-    keySkewTop(runToTable(spark,
+    keySkewTop(drain(spark,
       keySkewAgg(eventsStreamSplit(spark, dir, nFiles), keyCol),
-      OutputMode.Complete()), topK)
+      Memory(OutputMode.Complete())), topK)
 
   /** Per-key count aggregate + post-drain total/ppm/top-K projection —
     * shared by the complete-mode monitor and its Update-mode twin.
@@ -434,7 +520,7 @@ object StreamingOps {
       .groupBy("content_hash")
       .agg(min(col("doc_id")).as("keeper_doc_id"),
            count(lit(1)).as("n_copies"))
-    runToTable(spark, agg, OutputMode.Complete())
+    drain(spark, agg, Memory(OutputMode.Complete()))
   }
 
   /** Streaming frame-level media dedup: the multimodal landing-dir shape —
@@ -456,7 +542,7 @@ object StreamingOps {
       .groupBy("frame_hash")
       .agg(min(col("media_id")).as("keeper_media_id"),
            count(lit(1)).as("n_copies"))
-    runToTable(spark, agg, OutputMode.Complete())
+    drain(spark, agg, Memory(OutputMode.Complete()))
   }
 
   /** Streaming dedup with BOUNDED state: `dropDuplicatesWithinWatermark`
@@ -493,7 +579,7 @@ object StreamingOps {
       .withColumn("n_chars_text", length(col("text")).cast("long"))
       .dropDuplicatesWithinWatermark("content_hash")
       .select("content_hash", "n_chars_text")
-    runToTable(spark, st, OutputMode.Append())
+    drain(spark, st, Memory(OutputMode.Append()))
   }
 
   /** Streaming decontamination: eval-leakage checked as documents LAND —
@@ -549,7 +635,7 @@ object StreamingOps {
       .groupBy("doc_id", "bench_doc_id")
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
-    runToTable(spark, agg, OutputMode.Complete())
+    drain(spark, agg, Memory(OutputMode.Complete()))
   }
 
   /** Streaming exact-substring decontamination: the verbatim-13-token-
@@ -577,7 +663,7 @@ object StreamingOps {
     val agg = corpusW.join(broadcast(benchWh), Seq("wh"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_matched_windows"))
-    runToTable(spark, agg, OutputMode.Complete())
+    drain(spark, agg, Memory(OutputMode.Complete()))
   }
 
   /** Streaming twin of the exact-leakage ATTRIBUTION report
@@ -585,7 +671,7 @@ object StreamingOps {
     * stream state: the plan inside the stream is a per-row explode +
     * stream-static broadcast join, so every (suite, source, doc_id) hit
     * row emits under Append the trigger its document lands in and drains
-    * through the NATIVE parquet file sink ([[runAppendToFiles]] — the
+    * through the NATIVE parquet file sink ([[ParquetFiles]] — the
     * driver holds nothing). The (suite × source) attribution, doc
     * distinct-count and ppm run POST-DRAIN via the batch operator's own
     * [[graft.operators.TextOps.attributeContamination]] — shared code,
@@ -620,7 +706,7 @@ object StreamingOps {
       .filter(col("doc_id") % 11 =!= 0)
       .groupBy("source").agg(count(lit(1)).as("src_docs"))
     graft.operators.TextOps.attributeContamination(
-      runAppendToFiles(spark, hits), srcTot)
+      drain(spark, hits, ParquetFiles), srcTot)
   }
 
   /** The release capstone's STATELESS prefix as one Append-mode ingest
@@ -673,7 +759,7 @@ object StreamingOps {
       .withColumn("admit", col("keep") && col("n_bloom_hits") === 0L)
       .select("doc_id", "lang", "n_grams", "w_sum", "score_milli", "keep",
               "n_bloom_hits", "admit")
-    runToTable(spark, scored, OutputMode.Append())
+    drain(spark, scored, Memory(OutputMode.Append()))
   }
 
   case class BandRow(doc_id: Long, band: String)
@@ -704,10 +790,10 @@ object StreamingOps {
   def minhashCandidatesStream(spark: SparkSession, dir: String,
                               k: Int = 8, bands: Int = 4,
                               maxPerBand: Int = Int.MaxValue): DataFrame =
-    runToTable(spark,
+    drain(spark,
       minhashCandidatePairs(spark, docsStream(spark, dir), k, bands,
         maxPerBand),
-      OutputMode.Append())
+      Memory(OutputMode.Append()))
       // a pair sharing several bands emits once per band; the batch
       // operator ends in .distinct() — same dedup on the drained result
       .distinct()
@@ -727,11 +813,11 @@ object StreamingOps {
                                     k: Int = 8, bands: Int = 4,
                                     maxPerBand: Int = 64,
                                     nFiles: Int = 4): DataFrame =
-    runToTable(spark,
+    drain(spark,
       minhashCandidatePairs(spark,
         stagedStreamSplit(spark, dir, "documents", nFiles), k, bands,
         maxPerBand),
-      OutputMode.Append())
+      Memory(OutputMode.Append()))
       .distinct()
 
   /** Streaming winnowing — the live pairing of `dedup_winnowed`:
@@ -764,8 +850,8 @@ object StreamingOps {
         explode(graft.operators.TextOps
           .winnowedFingerprintSet(col("text"), k, w)).as("band"))
       .as[BandRow]
-    runToTable(spark, bandedCandidatePairs(spark, banded, maxPerBand),
-        OutputMode.Append())
+    drain(spark, bandedCandidatePairs(spark, banded, maxPerBand),
+        Memory(OutputMode.Append()))
       .groupBy("doc_a", "doc_b")
       .agg(count(lit(1)).as("n_shared_fp"))
       .filter(col("n_shared_fp") >= minShared)
@@ -880,9 +966,9 @@ object StreamingOps {
                                             bands, rowsPerBand): _*))
           .as("band"))
       .as[BandRow]
-    val cand = runToTable(spark,
+    val cand = drain(spark,
       bandedCandidatePairs(spark, banded, maxPerBand),
-      OutputMode.Append())
+      Memory(OutputMode.Append()))
       .distinct()
       .select(col("doc_a").as("vec_a"), col("doc_b").as("vec_b"))
     // post-drain exact verification against statically recomputed features
@@ -1016,7 +1102,7 @@ object StreamingOps {
     // files as batches commit instead of accumulating in the driver's
     // memory sink — the one reason the ×10 stub-saturation rehearsal
     // needed 48 g of driver heap; the plan itself is stateless
-    val drained = runAppendToFiles(spark, ownRows.union(forRows))
+    val drained = drain(spark, ownRows.union(forRows), ParquetFiles)
     // post-drain: only the batch operator's per-media aggregation shapes
     val own = drained.filter(col("src") === "own")
       .groupBy("media_id")
@@ -1057,7 +1143,7 @@ object StreamingOps {
           s"div ${bucketUs}L"))
       .groupBy("user_id", "event_type", "bucket")
       .agg(count(lit(1)).as("n"))
-    runToTable(spark, agg, OutputMode.Complete())
+    drain(spark, agg, Memory(OutputMode.Complete()))
       .groupBy("event_type")
       .agg(sum(col("n")).as("n_events"),
            count(lit(1)).as("n_kept"))
@@ -1083,7 +1169,7 @@ object StreamingOps {
                floor(col("value")).cast("long").as("bucket"))
       .agg(count(lit(1)).as("c"))
     graft.operators.EventOps.histCutoff(
-      runToTable(spark, hist, OutputMode.Complete()), pct)
+      drain(spark, hist, Memory(OutputMode.Complete())), pct)
   }
 
   /** The anomaly tripwire live: the exact median/MAD report is excluded
@@ -1101,7 +1187,7 @@ object StreamingOps {
                floor(col("value")).cast("long").as("bucket"))
       .agg(count(lit(1)).as("c"))
     graft.operators.EventOps.madFromHist(
-      runToTable(spark, hist, OutputMode.Complete()), kSigma)
+      drain(spark, hist, Memory(OutputMode.Complete())), kSigma)
   }
 
   /** Streaming length-profile quantiles: the dataset-card p50/p90/p99
@@ -1116,8 +1202,8 @@ object StreamingOps {
   def lengthQuantilesStream(spark: SparkSession, dir: String,
                             pcts: Seq[Int] = Seq(50, 90, 99)): DataFrame = {
     require(pcts.nonEmpty, "lengthQuantilesStream: pcts must be non-empty")
-    lengthQuantilesFrom(runToTable(spark,
-      lengthHistAgg(docsStream(spark, dir)), OutputMode.Complete()), pcts)
+    lengthQuantilesFrom(drain(spark, lengthHistAgg(docsStream(spark, dir)),
+      Memory(OutputMode.Complete())), pcts)
   }
 
   /** (source, token-length) histogram aggregate + post-drain exact
@@ -1157,8 +1243,8 @@ object StreamingOps {
     * .mixReport]], so the same oracle verifies it.
     */
   def mixReportStream(spark: SparkSession, dir: String): DataFrame =
-    mixReportShares(runToTable(spark,
-      mixReportAgg(docsStream(spark, dir)), OutputMode.Complete()))
+    mixReportShares(drain(spark,
+      mixReportAgg(docsStream(spark, dir)), Memory(OutputMode.Complete())))
 
   /** (lang, source) composition aggregate + post-drain ppm-share
     * projection — shared by the complete-mode monitor and its Update-mode
@@ -1190,8 +1276,8 @@ object StreamingOps {
     */
   def vocabularyStream(spark: SparkSession, dir: String,
                        topN: Int): DataFrame =
-    vocabTopN(runToTable(spark, vocabAgg(docsStream(spark, dir)),
-      OutputMode.Complete()), topN)
+    vocabTopN(drain(spark, vocabAgg(docsStream(spark, dir)),
+      Memory(OutputMode.Complete())), topN)
 
   /** Per-token count aggregate + deterministic top-N — shared by the
     * complete-mode monitor, the Zipf-fit monitor, and the Update-mode
@@ -1217,8 +1303,8 @@ object StreamingOps {
   def zipfSlopeStream(spark: SparkSession, dir: String,
                       topN: Int): DataFrame = {
     graft.operators.TextOps.zipfFitFromVocab(
-      runToTable(spark, vocabAgg(docsStream(spark, dir)),
-        OutputMode.Complete()), topN)
+      drain(spark, vocabAgg(docsStream(spark, dir)),
+        Memory(OutputMode.Complete())), topN)
   }
 
   // ---- Update-mode deployment variants ---------------------------------
@@ -1237,115 +1323,10 @@ object StreamingOps {
                                      nFiles: Int): DataFrame =
     stagedStreamSplit(spark, dir, "documents", nFiles)
 
-  /** Drain an Update-mode aggregation through a foreachBatch DELTA sink:
-    * each trigger appends only that trigger's updated rows, stamped with
-    * the batch id, to a scratch parquet — the upsert-sink shape. Returns
-    * the full delta log (caller reduces latest-wins per key via
-    * [[latestPerKey]]); exposed private[graft] so specs can assert the
-    * per-trigger sink volume really is O(changed keys).
-    *
-    * Same session-conf discipline as [[runToTable]] (stream shuffle
-    * partitions overridden for the query, restored after the drain).
-    */
-  private[graft] def runUpdatesToDeltaLog(spark: SparkSession,
-                                          df: DataFrame): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory(
-      s"graft_updates_${counter.incrementAndGet()}_")
-    val dataDir = base.resolve("data").toString
-    val ckptDir = base.resolve("ckpt").toString
-    val overrides =
-      Map("spark.sql.shuffle.partitions" -> streamShufflePartitions(spark))
-    val saved = overrides.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    def restore(): Unit = saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
-    val q =
-      try df.writeStream.outputMode(OutputMode.Update())
-        .option("checkpointLocation", ckptDir)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // append = the delta log; an empty trigger appends nothing
-          batch.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(dataDir)
-        }.start()
-      catch { case t: Throwable => restore(); throw t }
-    try q.processAllAvailable()
-    finally { try q.stop() finally restore() }
-    // pin the log in block storage, then remove the scratch dirs — the
-    // drain must not leak a delta log + checkpoint per invocation
-    // (bench reps × queries would otherwise accumulate them for the
-    // machine's lifetime). An EMPTY source fires no trigger at all, so
-    // the data dir may never have been created — that is a legitimate
-    // empty delta log (schema = aggregate schema + batch_id), not a
-    // read error.
-    val out =
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(dataDir)))
-        spark.read.parquet(dataDir).localCheckpoint(eager = true)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        df.schema.add("batch_id", org.apache.spark.sql.types.LongType))
-    deleteRecursively(base.toFile)
-    out
-  }
-
   private def deleteRecursively(f: java.io.File): Unit = {
     val children = f.listFiles()
     if (children != null) children.foreach(deleteRecursively)
     f.delete(): Unit
-  }
-
-  /** Append-mode drain through Spark's NATIVE parquet file sink instead
-    * of the harness memory sink — the deployment form (r17 verdict item
-    * 3): candidate rows spill to executor-written files as micro-batches
-    * commit, the driver holds nothing, and the post-drain aggregation
-    * reads the spilled files. The memory sink collects every appended row
-    * into driver memory — fine for |keys|-sized monitor tables, wrong for
-    * per-PAIR row volumes (the stream caption gate's ×10 stub-saturation
-    * rehearsal needed 48 g of driver heap for 11.8 M drained hit rows;
-    * through this sink the same rehearsal runs in the default fork heap).
-    * Exactly-once comes from the sink's _spark_metadata commit log — this
-    * IS what a production job writes, not a harness stand-in.
-    *
-    * An empty source fires no trigger and writes no files — a legitimate
-    * empty result (the declared schema), not a read error. Scratch dirs
-    * are pinned to block storage then removed, the
-    * [[runUpdatesToDeltaLog]] hygiene.
-    */
-  private[graft] def runAppendToFiles(spark: SparkSession,
-                                      df: DataFrame): DataFrame = {
-    val base = java.nio.file.Files.createTempDirectory(
-      s"graft_append_${counter.incrementAndGet()}_")
-    val dataDir = base.resolve("data").toString
-    val ckptDir = base.resolve("ckpt").toString
-    val overrides =
-      Map("spark.sql.shuffle.partitions" -> streamShufflePartitions(spark))
-    val saved = overrides.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    def restore(): Unit = saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
-    val q =
-      try df.writeStream.outputMode(OutputMode.Append())
-        .format("parquet")
-        .option("path", dataDir)
-        .option("checkpointLocation", ckptDir)
-        .start()
-      catch { case t: Throwable => restore(); throw t }
-    try q.processAllAvailable()
-    finally { try q.stop() finally restore() }
-    val hasData = {
-      val d = new java.io.File(dataDir)
-      d.exists && Option(d.listFiles()).exists(
-        _.exists(f => f.isFile && f.getName.endsWith(".parquet")))
-    }
-    val out =
-      if (hasData) spark.read.parquet(dataDir).localCheckpoint(eager = true)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema)
-    deleteRecursively(base.toFile)
-    out
   }
 
   /** Latest-wins reduction of an Update-mode delta log: the newest
@@ -1370,8 +1351,8 @@ object StreamingOps {
   def mixReportStreamUpdate(spark: SparkSession, dir: String,
                             nFiles: Int = 4): DataFrame =
     mixReportShares(latestPerKey(
-      runUpdatesToDeltaLog(spark,
-        mixReportAgg(docsStreamSplit(spark, dir, nFiles))),
+      drain(spark,
+        mixReportAgg(docsStreamSplit(spark, dir, nFiles)), DeltaLog),
       Seq("lang", "source")))
 
   /** Update-mode twin of the mix SOLVER ([[graft.operators.CorpusOps
@@ -1394,7 +1375,7 @@ object StreamingOps {
         graft.operators.TextOps.tokenCount(col("text")))
       .groupBy("source").agg(sum(col("n_toks")).as("n_tokens"))
     graft.operators.CorpusOps.mixSolveFromTotals(
-      latestPerKey(runUpdatesToDeltaLog(spark, agg), Seq("source")),
+      latestPerKey(drain(spark, agg, DeltaLog), Seq("source")),
       budgetPct, maxEpochsPct)
   }
 
@@ -1405,8 +1386,8 @@ object StreamingOps {
   def keySkewStreamUpdate(spark: SparkSession, dir: String, keyCol: String,
                           topK: Int, nFiles: Int = 4): DataFrame =
     keySkewTop(latestPerKey(
-      runUpdatesToDeltaLog(spark,
-        keySkewAgg(eventsStreamSplit(spark, dir, nFiles), keyCol)),
+      drain(spark,
+        keySkewAgg(eventsStreamSplit(spark, dir, nFiles), keyCol), DeltaLog),
       Seq("key")), topK)
 
   /** Update-mode twin of [[vocabularyStream]]: per-token counts, delta
@@ -1417,8 +1398,8 @@ object StreamingOps {
   def vocabularyStreamUpdate(spark: SparkSession, dir: String,
                              topN: Int, nFiles: Int = 4): DataFrame =
     vocabTopN(latestPerKey(
-      runUpdatesToDeltaLog(spark,
-        vocabAgg(docsStreamSplit(spark, dir, nFiles))),
+      drain(spark,
+        vocabAgg(docsStreamSplit(spark, dir, nFiles)), DeltaLog),
       Seq("token")), topN)
 
   /** Update-mode twin of [[jsonPropsAggStream]]: per-type JSON rollup,
@@ -1427,8 +1408,8 @@ object StreamingOps {
     */
   def jsonPropsAggStreamUpdate(spark: SparkSession, dir: String,
                                nFiles: Int = 4): DataFrame =
-    latestPerKey(runUpdatesToDeltaLog(spark,
-      jsonPropsAgg(eventsStreamSplit(spark, dir, nFiles))),
+    latestPerKey(drain(spark,
+      jsonPropsAgg(eventsStreamSplit(spark, dir, nFiles)), DeltaLog),
       Seq("event_type"))
 
   /** Update-mode twin of [[lengthQuantilesStream]]: the per-(source,
@@ -1441,8 +1422,8 @@ object StreamingOps {
                                   nFiles: Int = 4): DataFrame = {
     require(pcts.nonEmpty, "lengthQuantilesStreamUpdate: pcts must be non-empty")
     lengthQuantilesFrom(latestPerKey(
-      runUpdatesToDeltaLog(spark,
-        lengthHistAgg(docsStreamSplit(spark, dir, nFiles))),
+      drain(spark,
+        lengthHistAgg(docsStreamSplit(spark, dir, nFiles)), DeltaLog),
       Seq("source", "n_tokens")), pcts)
   }
 
@@ -1479,7 +1460,7 @@ object StreamingOps {
       .select(col("user_id"), col("event_type"),
         expr(s"unix_micros(window.start) div ${bucketUs}L").as("bucket"),
         col("n"))
-    latestPerKey(runUpdatesToDeltaLog(spark, agg),
+    latestPerKey(drain(spark, agg, DeltaLog),
       Seq("user_id", "event_type", "bucket"))
       .groupBy("event_type")
       .agg(sum(col("n")).as("n_events"),
@@ -1528,7 +1509,7 @@ object StreamingOps {
       .select("incident_id", "ev_id")
     // both sides buffer the full disorder window — table-sized state, the
     // RocksDB case (0.55× of in-heap at sf0.1, r11)
-    val drained = runToTable(spark, pairs, OutputMode.Append(),
+    val drained = drain(spark, pairs, Memory(OutputMode.Append()),
       largeState = true)
     val counts = drained.groupBy("incident_id")
       .agg(count(lit(1)).as("n_pairs"))
@@ -1796,8 +1777,8 @@ object StreamingOps {
     import spark.implicits._
     val ev = eventsStreamSplit(spark, dir, nFiles)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us")).as[Ev]
-    val drained = runToTable(spark, gapHistUpdates(spark, ev),
-      OutputMode.Update())
+    val drained = drain(spark, gapHistUpdates(spark, ev),
+      Memory(OutputMode.Update()))
     val perUser = drained
       .groupBy("user_id")
       .agg(max(struct(col("n_gaps"), col("digits"), col("counts"))).as("s"))
@@ -1864,8 +1845,8 @@ object StreamingOps {
     val ev = eventsStreamSplit(spark, dir, nFiles)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
               col("event_type")).as[EvT]
-    val drained = runToTable(spark, funnelUpdates(spark, ev, steps),
-      OutputMode.Update())
+    val drained = drain(spark, funnelUpdates(spark, ev, steps),
+      Memory(OutputMode.Update()))
     val latest = drained
       .groupBy("user_id")
       .agg(max(struct(col("n_seen"), col("t_step"))).as("s"))
@@ -1929,8 +1910,8 @@ object StreamingOps {
     val ev = eventsStreamSplit(spark, dir, nFiles)
       .select(col("user_id"),
               unix_date(to_date(col("ts"))).as("epoch_day")).as[EvD]
-    val drained = runToTable(spark, retentionUpdates(spark, ev),
-      OutputMode.Update())
+    val drained = drain(spark, retentionUpdates(spark, ev),
+      Memory(OutputMode.Update()))
     drained
       .groupBy("user_id")
       .agg(max(struct(col("n_days"), col("cohort_day"),
@@ -2043,8 +2024,8 @@ object StreamingOps {
     val gapUs = gapMinutes * 60L * 1000000L
     val ev = eventsStreamSplit(spark, dir, nFiles)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us")).as[Ev]
-    val drained = runToTable(spark,
-      sessionLengthUpdates(spark, ev, gapUs), OutputMode.Update())
+    val drained = drain(spark,
+      sessionLengthUpdates(spark, ev, gapUs), Memory(OutputMode.Update()))
     drained
       .groupBy("user_id")
       .agg(max(struct(col("n_total"), col("sizes"), col("counts"))).as("s"))
@@ -2070,8 +2051,8 @@ object StreamingOps {
     val gapUs = gapMinutes * 60L * 1000000L
     val ev = eventsStreamSplit(spark, dir, nFiles)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us")).as[Ev]
-    val drained = runToTable(spark, sessionizeUpdates(spark, ev, gapUs),
-      OutputMode.Update())
+    val drained = drain(spark, sessionizeUpdates(spark, ev, gapUs),
+      Memory(OutputMode.Update()))
     // Update-mode memory sink appends each trigger's emissions; the final
     // cumulative row per user is the one with the largest n_events (strictly
     // increasing per emission — struct max picks it without a shuffle-heavy
@@ -2250,8 +2231,8 @@ object StreamingOps {
       .as[AsofEv]
     // declared exact mode buffers every view + pending purchase —
     // table-sized state, the RocksDB case (0.78× of in-heap at sf0.1, r11)
-    val drained = runToTable(spark, asofJoinUpdates(spark, ev),
-      OutputMode.Update(), largeState = true)
+    val drained = drain(spark, asofJoinUpdates(spark, ev),
+      Memory(OutputMode.Update()), largeState = true)
     drained
       .groupBy("event_id")
       .agg(max(struct(col("seen"), col("user_id"), col("value"),

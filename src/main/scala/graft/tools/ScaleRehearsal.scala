@@ -181,9 +181,7 @@ object ScaleRehearsal {
                 .getOrElse(graft.SparkEntry.queries(q)(spark, dir))
                 .write.format("noop").mode("overwrite").save()
               val dt = (System.nanoTime() - t0) / 1e9
-              spark.sparkContext.getPersistentRDDs.values
-                .foreach(graft.operators.Barriers.quietUnpersist)
-              spark.sharedState.cacheManager.clearCache()
+              graft.operators.Barriers.purge(spark)
               dt
             }.sorted
             f"""{"scale":$n,"query":"$q","median_s":${times(times.length / 2)}%.3f,"runs":[${times.map(t => f"$t%.3f").mkString(",")}]}"""

@@ -123,7 +123,7 @@ class BarriersSpec extends AnyFunSuite {
     import org.apache.logging.log4j.core.LoggerContext
     val rdd = spark.range(8).rdd.map(identity).persist()
     rdd.count()
-    Barriers.quietUnpersist(rdd) // installs the filter for this RDD class
+    Barriers.purge(spark) // installs the filter for this RDD class
     val cls = rdd.getClass.getName
     val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
     val lc = ctx.getConfiguration.getLoggerConfig(cls)
@@ -172,7 +172,7 @@ class BarriersSpec extends AnyFunSuite {
     // appenders — the sentinel stays quiet when the filter works
     val rdd = spark.range(4).rdd.map(identity).persist()
     rdd.count()
-    Barriers.quietUnpersist(rdd) // installs the filter + really unpersists
+    Barriers.purge(spark) // installs the filter + really unpersists
     val mid = Barriers.unpersistNoiseLeaks()
     LogManager.getLogger(rdd.getClass.getName)
       .warn("RDD 9 is truncated and cannot be recomputed after unpersisting")

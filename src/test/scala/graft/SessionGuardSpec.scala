@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * only `Main`, whose master `spark-submit` supplies, builds its own.
   * A new copy of the builder config would let one entry point plan the
   * declared queries differently from the rest. Likewise every listener in
-  * the main sources is [[Profile]], so per-query counters have one source.
+  * the main sources is [[Profile]], so per-query counters have one source,
+  * and every barrier is `Barriers.materialize`, so one strategy conf
+  * covers them all.
   */
 class SessionGuardSpec extends AnyFunSuite {
 
@@ -51,5 +53,14 @@ class SessionGuardSpec extends AnyFunSuite {
       "profile through graft.Profile instead of a listener of your own: " +
         bad.mkString(", "))
     assert(files.exists(_.endsWith("graft/Profile.scala")))
+  }
+
+  test("frames are pinned or cached only in Barriers.scala") {
+    val bad = offenders(Set("graft/operators/Barriers.scala"),
+      Seq(".localCheckpoint(", ".checkpoint(", ".persist(", ".cache()"))
+    assert(bad.isEmpty,
+      "pin through graft.operators.Barriers.materialize instead, so " +
+        "graft.barrier.strategy covers the frame: " + bad.mkString(", "))
+    assert(files.exists(_.endsWith("graft/operators/Barriers.scala")))
   }
 }

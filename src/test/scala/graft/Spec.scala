@@ -19,16 +19,10 @@ object Spec {
   }
 
   /** Drop cached blocks left behind by earlier suites. Suites run
-    * sequentially in one forked JVM and several operators materialize
-    * frames (Barriers.materialize → localCheckpoint) that nothing can
-    * release before the action completes; by the time the last suites run,
+    * sequentially in one forked JVM, so by the time the last suites run,
     * hundreds of dead pinned blocks are pure memory pressure. Wall-clock-
     * sensitive suites (the continuous-sync ticker's 30 s deadlines) call
     * this up front so they measure their own work, not 17 prior suites'.
     */
-  def sweepCaches(): Unit = {
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(graft.operators.Barriers.quietUnpersist)
-    spark.sharedState.cacheManager.clearCache()
-  }
+  def sweepCaches(): Unit = graft.operators.Barriers.purge(spark)
 }

@@ -914,7 +914,7 @@ class StreamingOpsSpec extends AnyFunSuite {
     val agg = stream
       .select(explode(split(col("text"), " ")).as("token"))
       .groupBy("token").agg(count(lit(1)).as("freq"))
-    val log = StreamingOps.runUpdatesToDeltaLog(spark, agg)
+    val log = StreamingOps.drain(spark, agg, StreamingOps.DeltaLog)
       .localCheckpoint(true)
     val nBatches = log.select("batch_id").distinct().count()
     val nKeys = log.select("token").distinct().count()
